@@ -95,6 +95,16 @@ def trim_halo(tile: np.ndarray, loc: Sequence[int], grid: Sequence[int],
     return tile[sel]
 
 
+def unpad_tile(tile: np.ndarray, loc: Sequence[int],
+               chunk_shape: Sequence[int],
+               image_shape: Sequence[int]) -> np.ndarray:
+    """Inverse of ``pad_tile``: shrink an edge tile back to its part of
+    the image (reference ``relabeling.py:237-240``)."""
+    sel = tuple(slice(0, min((l + 1) * c, s) - l * c)
+                for l, c, s in zip(loc, chunk_shape, image_shape))
+    return tile[sel]
+
+
 def tile_origin(loc: Sequence[int], grid: Sequence[int],
                 chunk_shape: Sequence[int],
                 overlaps: Sequence[int]) -> Loc:

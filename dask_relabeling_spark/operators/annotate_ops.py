@@ -14,21 +14,19 @@ are collected for the driver-side zip step.
 """
 from __future__ import annotations
 
-import json
 import os
 import pathlib
 import shutil
 import zipfile
 from datetime import datetime
-from typing import Iterator, Optional, Union
+from typing import Optional, Union
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..kernels.annotate import annotation_offset, labels_to_annotations
-from ..kernels.halo import tile_origin
-from ..sources.tiles import TileSet, key_cols, pdf_classes, pdf_tile
+from ..kernels.stages import annotate_stage
+from ..sources.tiles import TileSet
+from .halo import map_tiles_records
 
 ANNOTATION_SCHEMA = T.StructType([
     T.StructField("cz", T.IntegerType(), True),
@@ -66,39 +64,11 @@ def annotate_labeled_tiles(ts: TileSet,
     object is annotated by the 2D contour of its (y, x) footprint plus
     an inclusive ``zRange`` property
     (``kernels/annotate.py::labels_to_annotations_3d``)."""
-    if object_classes is None:
-        object_classes = {0: "cell"}
-    nd, grid, chunk, ov = ts.nd, ts.grid, ts.chunk_shape, ts.overlaps
-    if nd not in (2, 3):
-        raise NotImplementedError(f"annotation supports 2D/3D, got {nd}D")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.annotate import (annotation_offset_nd,
-                                        labels_to_annotations_3d)
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                tile = pdf_tile(row, nd)
-                cls = pdf_classes(row, nd)
-                loc = tuple(int(row[c]) for c in key_cols(nd))
-                origin = tile_origin(loc, grid, chunk, ov)
-                if nd == 2:
-                    off = annotation_offset(loc, origin, ov)
-                    ann = labels_to_annotations(tile, object_classes,
-                                                classes=cls, offset=off)
-                else:
-                    off = annotation_offset_nd(loc, origin, ov)
-                    ann = labels_to_annotations_3d(tile, object_classes,
-                                                   classes=cls, offset=off)
-                recs.append({
-                    "cz": loc[0] if nd == 3 else None,
-                    "cy": loc[-2], "cx": loc[-1],
-                    "annotation": None if ann is None else json.dumps(ann),
-                })
-            yield pd.DataFrame.from_records(
-                recs, columns=["cz", "cy", "cx", "annotation"])
-
-    return ts.df.mapInPandas(gen, ANNOTATION_SCHEMA)
+    if ts.nd not in (2, 3):
+        raise NotImplementedError(f"annotation supports 2D/3D, got {ts.nd}D")
+    return map_tiles_records(
+        ts, annotate_stage(ts.grid, ts.chunk_shape, ts.overlaps,
+                           object_classes), ANNOTATION_SCHEMA)
 
 
 def zip_annotated_tiles(annotations: DataFrame,

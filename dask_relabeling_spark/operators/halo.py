@@ -8,6 +8,22 @@ co-locates each tile with the up-to-``3^nd - 1`` margins it needs, and an
 Arrow-batched ``applyInPandas`` assembles the expanded view with
 ``np.block``.
 
+Every tile operator is built from two passes, the counterparts of dask's
+``map_blocks`` and ``map_overlap``:
+
+* ``_per_tile`` — the one narrow ``mapInPandas`` loop (``map_tiles``,
+  ``map_tiles_records``, ``emit_pieces`` and the per-tile operators in
+  ``relabel_ops`` / ``annotate_ops`` all run through it);
+* ``exchange_records_from_pieces`` — the one grouped pass: assemble a
+  tile's expanded view from its pieces, then run a kernel on it
+  (``halo_exchange`` and both stages of ``double_exchange_pieces``).
+
+Fused pipelines compose them, e.g. ``double_exchange_pieces(emit_pieces(
+ts, ov, pre), ...)`` is ``image2labels``' whole 3-pass / 2-shuffle plan.
+The per-tile stage kernels they run are defined once, in
+``kernels/stages.py``, and shared by the staged operators and the fused
+chains.
+
 Why this shape at 100 TB: the only data that moves twice is the margins
 (O(surface-area); for 512^2 tiles with a 16 px halo ~12 % of volume), the
 shuffle key is the integer tile key (AQE can coalesce / split skewed
@@ -16,7 +32,8 @@ at a time, bounding executor memory at ``tile_bytes * 3^nd`` worst case.
 """
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+from itertools import product
+from typing import Any, Iterator, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -24,8 +41,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels.halo import assemble_expanded, pad_tile
-from ..sources.tiles import (TILE_FIELDS, TILE_SCHEMA, TileSet,
+from ..kernels.halo import assemble_expanded, margin_pieces
+from ..kernels.stages import crop_stage, pad_stage, trim_stage
+from ..sources.tiles import (TILE_SCHEMA, TileSet,
                              attributed_error, checked_loc, key_cols,
                              pdf_classes, pdf_tile, tile_record)
 
@@ -66,7 +84,7 @@ def _chunk_loud(loc, fn):
 # (measured ~4x faster for a map->shuffle->group round-trip of 17 MB
 # tiles).  The public TileSet payload stays ARRAY<BIGINT> so tile tables
 # remain queryable with Spark array functions.
-_PIECE_SCHEMA = T.StructType([
+PIECE_SCHEMA = T.StructType([
     T.StructField("cz", T.IntegerType(), True),
     T.StructField("cy", T.IntegerType(), False),
     T.StructField("cx", T.IntegerType(), False),
@@ -80,7 +98,6 @@ _PIECE_SCHEMA = T.StructType([
     T.StructField("nclasses", T.IntegerType(), True),
     T.StructField("classes", T.BinaryType(), True),
 ])
-PIECE_SCHEMA = _PIECE_SCHEMA  # public: builder-side piece emission
 
 
 def _mmh3_int32(x: int, seed: int = 42) -> int:
@@ -193,7 +210,7 @@ def apply_by_tile_key(df: DataFrame, nd: int, grid, fn, schema):
     for g in dims:
         n_tiles *= g
     if n_tiles <= _SMALL_GRID_TILES:
-        return df.groupBy(*keys).applyInPandas(fn, schema)
+        return df.groupBy(*keys).applyInPandas(_hinted(fn, 0), schema)
     spark = df.sparkSession
     try:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -210,13 +227,23 @@ def apply_by_tile_key(df: DataFrame, nd: int, grid, fn, schema):
     salted = df.withColumn(
         "__tile_pt", F.element_at(salt_arr, (F.pmod(lin, F.lit(n))
                                              + 1).cast("int")))
-
-    def unsalted(key, pdf):
-        return fn(key[1:], pdf)
-
     return (salted.repartition(n, "__tile_pt")
             .groupBy("__tile_pt", *keys)
-            .applyInPandas(unsalted, schema))
+            .applyInPandas(_hinted(fn, 1), schema))
+
+
+def _hinted(fn, n_salt: int):
+    """``fn(key, pdf)`` behind a fully type-hinted signature, with the
+    leading ``n_salt`` salt columns stripped from the key.  PySpark
+    infers the eval type of an ``applyInPandas`` function from its
+    hints; a partly hinted ``(key, pdf: pd.DataFrame)`` kernel makes it
+    warn ``Cannot infer the eval type from type hints`` on every call.
+    These hints infer the same ``SQL_GROUPED_MAP_PANDAS_UDF`` the
+    unhinted default picks."""
+    def grouped(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
+        return fn(key[n_salt:], pdf)
+
+    return grouped
 
 
 def _piece_shape(row, nd: int) -> tuple:
@@ -237,60 +264,48 @@ def _piece_classes(row, nd: int):
         .reshape((n,) + _piece_shape(row, nd))
 
 
-def pad_edge_tiles(ts: TileSet) -> TileSet:
-    """Zero-pad edge tiles up to the chunk shape (narrow; no shuffle).
-    Reference ``relabeling.py:169-183`` pads the whole array to a chunk
-    multiple — per-tile that touches only the last tile of each axis."""
-    nd, chunk, grid = ts.nd, ts.chunk_shape, ts.grid
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                loc = checked_loc(row, nd, grid)
-
-                def work(row=row, loc=loc):
-                    tile = pad_tile(pdf_tile(row, nd), chunk)
-                    cls = pdf_classes(row, nd)
-                    if cls is not None:
-                        cls = np.stack([pad_tile(p, chunk) for p in cls])
-                    return tile_record(loc, tile, cls)
-
-                recs.append(_chunk_loud(loc, work))
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in TILE_FIELDS])
-
-    padded_shape = tuple(g * c for g, c in zip(ts.grid, chunk))
-    return ts.with_df(ts.df.mapInPandas(gen, TILE_SCHEMA))
+def _piece_rec(dest, pos, piece: np.ndarray,
+               cls: Optional[np.ndarray]) -> dict:
+    nd = piece.ndim
+    return {
+        "cz": int(dest[0]) if nd == 3 else None,
+        "cy": int(dest[-2]), "cx": int(dest[-1]),
+        "pz": int(pos[0]) if nd == 3 else None,
+        "py": int(pos[-2]), "px": int(pos[-1]),
+        "d": int(piece.shape[0]) if nd == 3 else None,
+        "h": int(piece.shape[-2]), "w": int(piece.shape[-1]),
+        "data": np.ascontiguousarray(piece, dtype=np.int64).tobytes(),
+        "nclasses": None if cls is None else int(cls.shape[0]),
+        "classes": None if cls is None
+        else np.ascontiguousarray(cls, dtype=np.int64).tobytes(),
+    }
 
 
-def _emit_rows(tile, cls, loc, grid, depth) -> list:
-    """Piece rows one tile contributes to the exchange: its own body at the
-    center position plus one margin slice per existing neighbor."""
-    from itertools import product as iproduct
-    nd = tile.ndim
-    recs = [_piece_rec(loc, (0,) * nd, tile, cls)]
-    for d in iproduct((-1, 0, 1), repeat=nd):
-        if all(x == 0 for x in d):
-            continue
-        dest = tuple(l + x for l, x in zip(loc, d))
-        if any(not (0 <= c < g) for c, g in zip(dest, grid)):
-            continue
-        pos = tuple(-x for x in d)
-        sel = tuple(
-            slice(tile.shape[ax] - depth[ax], None)
-            if pos[ax] == -1 else
-            (slice(0, depth[ax]) if pos[ax] == 1
-             else slice(None))
-            for ax in range(nd))
-        piece_cls = None if cls is None else cls[(slice(None),) + sel]
-        recs.append(_piece_rec(dest, pos, tile[sel], piece_cls))
+def emit_piece_records(tile, cls, loc, grid, depth) -> list:
+    """The piece rows (``PIECE_SCHEMA``) one tile contributes to the
+    exchange: its own body at the center position plus one
+    ``kernels.halo.margin_pieces`` slice per in-grid neighbor, the
+    classes planes sliced alongside.
+
+    Also the builder-side fusion hook: a source that materializes tiles
+    inside its own Python pass (e.g. a bitmap-word expander) can emit
+    the halo PIECES directly — the full tile payload then never crosses
+    the Arrow boundary before the first exchange."""
+    depth = tuple(int(o) for o in depth)
+    recs = [_piece_rec(loc, (0,) * tile.ndim, tile, cls)]
+    planes = [] if cls is None else [margin_pieces(p, loc, grid, depth)
+                                     for p in cls]
+    for (dest, pos, piece), *cls_pieces in zip(
+            margin_pieces(tile, loc, grid, depth), *planes):
+        piece_cls = (np.stack([c for _, _, c in cls_pieces])
+                     if cls_pieces else None)
+        recs.append(_piece_rec(dest, pos, piece, piece_cls))
     return recs
 
 
 def _assemble_one(loc, pdf: pd.DataFrame, nd: int, grid):
-    """Inverse of ``_emit_rows``: (expanded_tile, expanded_classes) from one
-    key group of piece rows.
+    """Inverse of ``emit_piece_records``: (expanded_tile,
+    expanded_classes) from one key group of piece rows.
 
     Exchange-integrity checks (round-14 tile fuzz arm): a tile TABLE
     with a duplicated chunk key delivers two center payloads (or two
@@ -330,11 +345,10 @@ def _assemble_one(loc, pdf: pd.DataFrame, nd: int, grid):
     # every in-grid neighbor owes a margin piece: a chunk missing from
     # the table starves its neighbors' assemblies too, and without this
     # check that surfaces as an anonymous KeyError inside np.block
-    from itertools import product as iproduct
     axis_vals = [([-1] if loc[ax] > 0 else []) + [0]
                  + ([1] if loc[ax] < grid[ax] - 1 else [])
                  for ax in range(nd)]
-    for pos in iproduct(*axis_vals):
+    for pos in product(*axis_vals):
         if all(p == 0 for p in pos) or pos in pieces:
             continue
         nb = tuple(l + p for l, p in zip(loc, pos))
@@ -342,273 +356,131 @@ def _assemble_one(loc, pdf: pd.DataFrame, nd: int, grid):
             f"chunk {loc}: missing margin piece from neighbor {nb} "
             f"(tile tables must be dense over the declared grid)")
     expanded = assemble_expanded(center, loc, grid, pieces)
-    exp_cls = None
-    if center_cls is not None:
-        planes = []
-        for p in range(center_cls.shape[0]):
-            planes.append(assemble_expanded(
-                center_cls[p], loc, grid,
-                {k: v[p] for k, v in cls_pieces.items()}))
-        exp_cls = np.stack(planes)
+    exp_cls = None if center_cls is None else np.stack([
+        assemble_expanded(plane, loc, grid,
+                          {k: v[i] for k, v in cls_pieces.items()})
+        for i, plane in enumerate(center_cls)])
     return expanded, exp_cls
 
 
-def halo_exchange(ts: TileSet, overlaps: Sequence[int]) -> TileSet:
-    """Grow every tile by ``overlaps`` pixels per inner side with margins
-    pulled from its (up to 3^nd - 1) neighbors.  One shuffle."""
-    nd, grid = ts.nd, ts.grid
-    depth = tuple(int(o) for o in overlaps)
+def _per_tile(df: DataFrame, nd: int, grid, fn, schema) -> DataFrame:
+    """The one narrow per-tile pass (dask's ``map_blocks``; no shuffle):
+    ``fn(row, loc) -> list[dict]`` on every row of ``df``, its records
+    forming a ``schema`` frame.  The row's tile key is validated by
+    ``checked_loc`` first, and ``fn`` runs under ``_chunk_loud``, so
+    every tile operator fails loudly with the chunk's coordinates."""
+    cols = schema.fieldNames()
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             recs = []
             for _, row in pdf.iterrows():
                 loc = checked_loc(row, nd, grid)
-                recs.extend(_chunk_loud(loc, lambda: _emit_rows(
-                    pdf_tile(row, nd), pdf_classes(row, nd), loc, grid,
-                    depth)))
-            yield pd.DataFrame.from_records(
-                recs, columns=_PIECE_SCHEMA.fieldNames())
+                recs.extend(_chunk_loud(loc, lambda: fn(row, loc)))
+            yield pd.DataFrame.from_records(recs, columns=cols)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        loc = tuple(int(k) for k in key)
-        expanded, exp_cls = _chunk_loud(
-            loc, lambda: _assemble_one(loc, pdf, nd, grid))
-        return pd.DataFrame.from_records(
-            [tile_record(loc, expanded, exp_cls)],
-            columns=[f.name for f in TILE_FIELDS])
-
-    contribs = ts.df.mapInPandas(emit, _PIECE_SCHEMA)
-    out = apply_by_tile_key(contribs, nd, grid, assemble, TILE_SCHEMA)
-    return ts.with_df(out, overlaps=depth)
-
-
-def fused_double_exchange(ts: TileSet, overlaps: Sequence[int],
-                          pre_fn, mid_fn, final_fn) -> TileSet:
-    """The whole pad->overlap->kernels->overlap->kernels pipeline in THREE
-    Python passes and TWO shuffles (dask-style task fusion for the Arrow
-    boundary; reference pipeline shape SURVEY §3.1):
-
-        mapInPandas:    pre_fn(tile) -> emit margins           (pass 1)
-        groupBy key ->  assemble -> mid_fn -> emit margins     (pass 2)
-        groupBy key ->  assemble -> final_fn -> tile           (pass 3)
-
-    Unfused, the same pipeline is ~10 Python/Arrow round-trips of full
-    tile payloads; the kernels are identical, only the staging changes —
-    golden byte-equality is preserved.  All fns: (tile, cls, loc) ->
-    (tile, cls).
-    """
-    nd, grid = ts.nd, ts.grid
-    depth = tuple(int(o) for o in overlaps)
-
-    def emit1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                loc = checked_loc(row, nd, grid)
-
-                def work(row=row, loc=loc):
-                    tile, cls = pre_fn(pdf_tile(row, nd),
-                                       pdf_classes(row, nd), loc)
-                    return _emit_rows(tile, cls, loc, grid, depth)
-
-                recs.extend(_chunk_loud(loc, work))
-            yield pd.DataFrame.from_records(
-                recs, columns=_PIECE_SCHEMA.fieldNames())
-
-    p1 = ts.df.mapInPandas(emit1, _PIECE_SCHEMA)
-    a2 = double_exchange_pieces(p1, nd, grid, depth, mid_fn, final_fn)
-    return ts.with_df(a2, overlaps=(0,) * nd)
-
-
-def emit_piece_records(tile, cls, loc, grid, depth) -> list:
-    """Builder-side fusion hook: a source that materializes tiles inside
-    its own Python pass (e.g. a bitmap-word expander) can emit the halo
-    PIECES directly — the full tile payload then never crosses the Arrow
-    boundary before the first exchange.  Rows conform to
-    ``PIECE_SCHEMA``."""
-    return _emit_rows(tile, cls, loc, grid, tuple(int(o) for o in depth))
-
-
-def double_exchange_pieces(pieces_df: DataFrame, nd: int, grid,
-                           depth, mid_fn, final_fn) -> DataFrame:
-    """Passes 2+3 of ``fused_double_exchange`` for a source that already
-    emitted piece records (see ``emit_piece_records``): assemble ->
-    mid_fn -> emit margins -> exchange -> assemble -> final_fn -> tile.
-    Same kernels, same goldens, one fewer full-payload Arrow generation.
-    """
-
-    def mid(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        loc = tuple(int(k) for k in key)
-
-        def work():
-            tile, cls = _assemble_one(loc, pdf, nd, grid)
-            tile, cls = mid_fn(tile, cls, loc)
-            return _emit_rows(tile, cls, loc, grid, depth)
-
-        return pd.DataFrame.from_records(
-            _chunk_loud(loc, work), columns=_PIECE_SCHEMA.fieldNames())
-
-    def fin(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        loc = tuple(int(k) for k in key)
-
-        def work():
-            tile, cls = _assemble_one(loc, pdf, nd, grid)
-            tile, cls = final_fn(tile, cls, loc)
-            return [tile_record(loc, tile, cls)]
-
-        return pd.DataFrame.from_records(
-            _chunk_loud(loc, work), columns=[f.name for f in TILE_FIELDS])
-
-    a1 = apply_by_tile_key(pieces_df, nd, grid, mid, _PIECE_SCHEMA)
-    return apply_by_tile_key(a1, nd, grid, fin, TILE_SCHEMA)
-
-
-def _piece_rec(dest, pos, piece: np.ndarray,
-               cls: Optional[np.ndarray]) -> dict:
-    nd = piece.ndim
-    return {
-        "cz": int(dest[0]) if nd == 3 else None,
-        "cy": int(dest[-2]), "cx": int(dest[-1]),
-        "pz": int(pos[0]) if nd == 3 else None,
-        "py": int(pos[-2]), "px": int(pos[-1]),
-        "d": int(piece.shape[0]) if nd == 3 else None,
-        "h": int(piece.shape[-2]), "w": int(piece.shape[-1]),
-        "data": np.ascontiguousarray(piece, dtype=np.int64).tobytes(),
-        "nclasses": None if cls is None else int(cls.shape[0]),
-        "classes": None if cls is None
-        else np.ascontiguousarray(cls, dtype=np.int64).tobytes(),
-    }
-
-
-def fused_exchange_records(ts: TileSet, overlaps: Sequence[int],
-                           pre_fn, finish, out_schema) -> DataFrame:
-    """One halo exchange with kernels fused on both sides (2 Python
-    passes, 1 shuffle): ``pre_fn(tile, cls, loc) -> (tile, cls)`` runs
-    before the margin emit; ``finish(expanded, cls, loc) -> list[dict]``
-    runs on the assembled view and produces the output rows directly
-    (arbitrary ``out_schema`` — e.g. annotation records)."""
-    nd, grid = ts.nd, ts.grid
-    depth = tuple(int(o) for o in overlaps)
-    cols = out_schema.fieldNames()
-
-    def emit1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                loc = checked_loc(row, nd, grid)
-
-                def work(row=row, loc=loc):
-                    tile, cls = pre_fn(pdf_tile(row, nd),
-                                       pdf_classes(row, nd), loc)
-                    return _emit_rows(tile, cls, loc, grid, depth)
-
-                recs.extend(_chunk_loud(loc, work))
-            yield pd.DataFrame.from_records(
-                recs, columns=_PIECE_SCHEMA.fieldNames())
-
-    def fin(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        loc = tuple(int(k) for k in key)
-
-        def work():
-            tile, cls = _assemble_one(loc, pdf, nd, grid)
-            return finish(tile, cls, loc)
-
-        return pd.DataFrame.from_records(_chunk_loud(loc, work),
-                                         columns=cols)
-
-    p1 = ts.df.mapInPandas(emit1, _PIECE_SCHEMA)
-    return apply_by_tile_key(p1, nd, grid, fin, out_schema)
-
-
-def exchange_records_from_pieces(pieces_df: DataFrame, nd: int, grid,
-                                 finish, out_schema) -> DataFrame:
-    """``fused_exchange_records`` for a source that already emitted halo
-    pieces (see ``emit_piece_records``): one shuffle, one Python pass —
-    assemble the expanded view and run ``finish`` directly."""
-    cols = out_schema.fieldNames()
-
-    def fin(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        loc = tuple(int(k) for k in key)
-
-        def work():
-            tile, cls = _assemble_one(loc, pdf, nd, grid)
-            return finish(tile, cls, loc)
-
-        return pd.DataFrame.from_records(_chunk_loud(loc, work),
-                                         columns=cols)
-
-    return apply_by_tile_key(pieces_df, nd, grid, fin, out_schema)
+    return df.mapInPandas(gen, schema)
 
 
 def map_tiles_records(ts: TileSet, finish, out_schema) -> DataFrame:
     """Narrow fused map producing arbitrary records:
     ``finish(tile, cls, loc) -> list[dict]`` per tile, one Python pass,
     no shuffle."""
-    nd, grid = ts.nd, ts.grid
-    cols = out_schema.fieldNames()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                loc = checked_loc(row, nd, grid)
-                recs.extend(_chunk_loud(loc, lambda: finish(
-                    pdf_tile(row, nd), pdf_classes(row, nd), loc)))
-            yield pd.DataFrame.from_records(recs, columns=cols)
-
-    return ts.df.mapInPandas(gen, out_schema)
+    nd = ts.nd
+    return _per_tile(ts.df, nd, ts.grid, lambda row, loc: finish(
+        pdf_tile(row, nd), pdf_classes(row, nd), loc), out_schema)
 
 
-def map_tiles(ts: TileSet, fn, with_loc: bool = True) -> TileSet:
+def map_tiles(ts: TileSet, fn) -> TileSet:
     """Narrow per-tile map: ``fn(tile, classes, loc) -> (tile, classes)``.
     No shuffle; stays in one Arrow batch round-trip."""
-    nd, grid = ts.nd, ts.grid
+    return ts.with_df(map_tiles_records(
+        ts, lambda tile, cls, loc: [tile_record(loc, *fn(tile, cls, loc))],
+        TILE_SCHEMA))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                loc = checked_loc(row, nd, grid)
 
-                def work(row=row, loc=loc):
-                    new_tile, new_cls = fn(pdf_tile(row, nd),
-                                           pdf_classes(row, nd), loc)
-                    return tile_record(loc, new_tile, new_cls)
+def emit_pieces(ts: TileSet, depth: Sequence[int],
+                pre_fn=None) -> DataFrame:
+    """The emit side of a halo exchange (narrow): each tile, after the
+    optional ``pre_fn(tile, cls, loc) -> (tile, cls)``, becomes its
+    ``emit_piece_records`` rows keyed by destination chunk."""
+    grid = ts.grid
 
-                recs.append(_chunk_loud(loc, work))
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in TILE_FIELDS])
+    def emit(tile, cls, loc):
+        if pre_fn is not None:
+            tile, cls = pre_fn(tile, cls, loc)
+        return emit_piece_records(tile, cls, loc, grid, depth)
 
-    return ts.with_df(ts.df.mapInPandas(gen, TILE_SCHEMA))
+    return map_tiles_records(ts, emit, PIECE_SCHEMA)
+
+
+def exchange_records_from_pieces(pieces_df: DataFrame, nd: int, grid,
+                                 finish, out_schema) -> DataFrame:
+    """The one grouped pass (dask's ``map_overlap`` exchange): one
+    shuffle on the destination tile key, then per tile assemble the
+    expanded view from its pieces (``_assemble_one``) and run
+    ``finish(expanded, cls, loc) -> list[dict]`` on it, producing
+    ``out_schema`` rows directly."""
+    cols = out_schema.fieldNames()
+
+    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        loc = tuple(int(k) for k in key)
+        return pd.DataFrame.from_records(_chunk_loud(loc, lambda: finish(
+            *_assemble_one(loc, pdf, nd, grid), loc)), columns=cols)
+
+    return apply_by_tile_key(pieces_df, nd, grid, assemble, out_schema)
+
+
+def halo_exchange(ts: TileSet, overlaps: Sequence[int]) -> TileSet:
+    """Grow every tile by ``overlaps`` pixels per inner side with margins
+    pulled from its (up to 3^nd - 1) neighbors.  One shuffle."""
+    depth = tuple(int(o) for o in overlaps)
+    out = exchange_records_from_pieces(
+        emit_pieces(ts, depth), ts.nd, ts.grid,
+        lambda tile, cls, loc: [tile_record(loc, tile, cls)], TILE_SCHEMA)
+    return ts.with_df(out, overlaps=depth)
+
+
+def double_exchange_pieces(pieces_df: DataFrame, nd: int, grid,
+                           depth, mid_fn, final_fn) -> DataFrame:
+    """Two chained exchanges over emitted pieces: assemble -> mid_fn ->
+    emit margins -> exchange -> assemble -> final_fn -> tile.  Behind
+    ``emit_pieces`` (or a builder emitting pieces itself, see
+    ``emit_piece_records``) this is the whole
+    pad->overlap->kernels->overlap->kernels pipeline in THREE Python
+    passes and TWO shuffles (dask-style task fusion for the Arrow
+    boundary; reference pipeline shape SURVEY §3.1).  Unfused, the same
+    pipeline is ~10 Python/Arrow round-trips of full tile payloads; the
+    kernels are identical, only the staging changes — golden
+    byte-equality is preserved.  Both fns: (tile, cls, loc) ->
+    (tile, cls)."""
+
+    def mid(tile, cls, loc):
+        return emit_piece_records(*mid_fn(tile, cls, loc), loc, grid, depth)
+
+    def fin(tile, cls, loc):
+        return [tile_record(loc, *final_fn(tile, cls, loc))]
+
+    mids = exchange_records_from_pieces(pieces_df, nd, grid, mid,
+                                        PIECE_SCHEMA)
+    return exchange_records_from_pieces(mids, nd, grid, fin, TILE_SCHEMA)
+
+
+def pad_edge_tiles(ts: TileSet) -> TileSet:
+    """Zero-pad edge tiles up to the chunk shape (narrow; no shuffle).
+    Reference ``relabeling.py:169-183`` pads the whole array to a chunk
+    multiple — per-tile that touches only the last tile of each axis."""
+    return map_tiles(ts, pad_stage(ts.chunk_shape))
 
 
 def trim_overlap(ts: TileSet) -> TileSet:
     """Strip every tile's halo (narrow).  Reference ``relabeling.py:97``."""
-    nd, grid, ov = ts.nd, ts.grid, ts.overlaps
-
-    def fn(tile, cls, loc):
-        # `-o or None`: a zero overlap must not become slice(0, -0) == empty
-        sel = tuple(slice(o if c > 0 else 0,
-                          (-o or None) if c < g - 1 else None)
-                    for c, g, o in zip(loc, grid, ov))
-        new_cls = None if cls is None else cls[(slice(None),) + sel]
-        return tile[sel], new_cls
-
-    out = map_tiles(ts, fn)
-    return out.with_df(out.df, overlaps=(0,) * nd)
+    out = map_tiles(ts, trim_stage(ts.grid, ts.overlaps))
+    return out.with_df(out.df, overlaps=(0,) * ts.nd)
 
 
 def crop_to_image(ts: TileSet) -> TileSet:
     """Drop the pad added to reach a chunk multiple (narrow).  Edge tiles
     shrink back to their pre-pad extent (reference ``relabeling.py:237-240``).
     """
-    nd, grid, chunk, img = ts.nd, ts.grid, ts.chunk_shape, ts.image_shape
-
-    def fn(tile, cls, loc):
-        sel = tuple(slice(0, min((l + 1) * c, s) - l * c)
-                    for l, c, s in zip(loc, chunk, img))
-        new_cls = None if cls is None else cls[(slice(None),) + sel]
-        return tile[sel], new_cls
-
-    return map_tiles(ts, fn)
+    return map_tiles(ts, crop_stage(ts.chunk_shape, ts.image_shape))

@@ -8,22 +8,25 @@ halo exchanges — with every kernel stage a narrow map fused between them
 
     tiles -(exchange)-> overlapped -(UDF seg)-> -(UDF dedup)->
           -(exchange)-> -(UDF paste/trim)-> labels
+
+Each entry point composes the two passes of ``operators/halo.py``
+directly — ``emit_pieces`` in front of ``double_exchange_pieces``
+(labels) or ``exchange_records_from_pieces`` (annotations) — over the
+``kernels/stages.py`` kernels that the staged operators use too.
 """
 from __future__ import annotations
 
 from typing import Callable, List, Optional, Union
 
-import numpy as np
-
 from ..kernels.ccl import segment_fn as default_segment_fn
-from ..kernels.halo import pad_tile
-from ..kernels.relabel import (merge_tiles as merge_kernel,
-                               remove_overlapped_objects,
-                               zero_classes_where_removed)
+from ..kernels.stages import (annotate_stage, crop_stage, dedup_stage,
+                              merge_stage, pad_stage, segment_stage,
+                              trim_stage)
 from ..sources.tiles import TileSet
-from .halo import (crop_to_image, fused_double_exchange, halo_exchange,
-                   pad_edge_tiles)
-from .annotate_ops import annotate_labeled_tiles
+from .halo import (crop_to_image, double_exchange_pieces, emit_pieces,
+                   exchange_records_from_pieces, halo_exchange,
+                   map_tiles_records, pad_edge_tiles)
+from .annotate_ops import ANNOTATION_SCHEMA, annotate_labeled_tiles
 from .relabel_ops import (merge_overlapped_tiles, remove_overlapped_labels,
                           segment_overlapped_input, sort_label_indices)
 
@@ -41,28 +44,6 @@ def prepare_input(ts: TileSet, overlaps: Union[int, List[int]]) -> TileSet:
     return halo_exchange(pad_edge_tiles(ts), ov)
 
 
-def _pad_pre(chunk):
-    """Per-tile pad-to-chunk kernel for the fused exchanges (closes over
-    the chunk shape only — a TileSet holds the DataFrame and through it
-    the unpicklable SparkContext)."""
-    def pre(tile, cls, loc):
-        tile = pad_tile(tile, chunk)
-        if cls is not None:
-            cls = np.stack([pad_tile(p, chunk) for p in cls])
-        return tile, cls
-    return pre
-
-
-def _split_seg_output(out, returns_classes):
-    """Normalize a segmentation function's output to (labels, classes):
-    plane 0 is labels when the fn returns a stacked classes array
-    (reference contract, ``relabeling.py:22-24``)."""
-    out = np.asarray(out)
-    if returns_classes:
-        return out[0].astype(np.int64), out[1:].astype(np.int64)
-    return out.astype(np.int64), None
-
-
 def image2labels(ts: TileSet, seg_fn: Optional[Callable] = None,
                  overlaps: Union[int, List[int]] = 50,
                  threshold: float = 0.05,
@@ -77,11 +58,12 @@ def image2labels(ts: TileSet, seg_fn: Optional[Callable] = None,
     pad+overlap preparation, then equi-joins on the tile key
     (``relabeling.py:206-213``).
 
-    Physical plan (no tile kwargs): ``fused_double_exchange`` — the whole
-    pipeline in 3 Python passes / 2 shuffles, kernels unchanged (golden
-    byte-equality).  With aligned tile kwargs the equi-join forces a
-    materialization between exchange 1 and the segmentation UDF, so that
-    path keeps the stage-per-operator composition.
+    Physical plan (no tile kwargs): ``emit_pieces`` (pad + emit) into
+    ``double_exchange_pieces`` — the whole pipeline in 3 Python passes /
+    2 shuffles, kernels unchanged (golden byte-equality).  With aligned
+    tile kwargs the equi-join forces a materialization between exchange
+    1 and the segmentation UDF, so that path keeps the
+    stage-per-operator composition.
     """
     if segmentation_tile_kwargs:
         overlapped = prepare_input(ts, overlaps)
@@ -96,46 +78,30 @@ def image2labels(ts: TileSet, seg_fn: Optional[Callable] = None,
         return crop_to_image(merged)
 
     ov = _norm_overlaps(overlaps, ts.nd)
-    pre = _pad_pre(ts.chunk_shape)
     mid, fin = _labels_mid_fin(
         seg_fn or default_segment_fn, dict(segmentation_fn_kwargs or {}),
         returns_classes, ov, threshold, ts.grid, ts.chunk_shape,
         ts.image_shape)
-    return fused_double_exchange(ts, ov, pre, mid, fin)
+    out = double_exchange_pieces(
+        emit_pieces(ts, ov, pad_stage(ts.chunk_shape)), ts.nd, ts.grid, ov,
+        mid, fin)
+    return ts.with_df(out, overlaps=(0,) * ts.nd)
 
 
 def _labels_mid_fin(fn, kwargs, returns_classes, ov, threshold, grid,
                     chunk, img):
     """The segment+dedup (mid) and merge+trim+crop (fin) kernel chains of
     ``image2labels``, shared with the from-pieces fusion path."""
+    segment = segment_stage(fn, kwargs, returns_classes)
+    dedup = dedup_stage(grid, ov, threshold)
+    merge, trim = merge_stage(grid, ov), trim_stage(grid, ov)
+    crop = crop_stage(chunk, img)
 
     def mid(tile, cls, loc):
-        seg, seg_cls = _split_seg_output(fn(tile, **kwargs),
-                                         returns_classes)
-        removed = remove_overlapped_objects(seg, ov, threshold, loc, grid)
-        new_cls = None
-        if seg_cls is not None:
-            new_cls = np.stack([zero_classes_where_removed(removed, p)
-                                for p in seg_cls])
-        return removed, new_cls
+        return dedup(*segment(tile, cls, loc), loc)
 
     def fin(tile, cls, loc):
-        merged = merge_kernel(tile, ov, loc, grid, classes=cls)
-        if cls is not None:
-            m, mc = merged[0], merged[1:]
-        else:
-            m, mc = merged, None
-        # NB `-o or None`: with a zero overlap on an axis slice(0, -0)
-        # would silently empty the tile
-        trim = tuple(slice(o if c > 0 else 0,
-                           (-o or None) if c < g - 1 else None)
-                     for c, g, o in zip(loc, grid, ov))
-        crop = tuple(slice(0, min((l + 1) * c, s) - l * c)
-                     for l, c, s in zip(loc, chunk, img))
-        m = m[trim][crop]
-        mc = None if mc is None else mc[(slice(None),) + trim][
-            (slice(None),) + crop]
-        return m, mc
+        return crop(*trim(*merge(tile, cls, loc), loc), loc)
 
     return mid, fin
 
@@ -151,7 +117,6 @@ def image2labels_from_pieces(pieces_df, nd: int, grid, chunk_shape,
     the first exchange — one fewer full-payload generation than
     building a tile table first.  Kernels and result are identical to
     ``image2labels`` (asserted by ``tests/test_spark_pipeline.py``)."""
-    from .halo import double_exchange_pieces
     ov = _norm_overlaps(overlaps, nd)
     mid, fin = _labels_mid_fin(
         seg_fn or default_segment_fn, {}, False, ov, threshold, grid,
@@ -166,39 +131,24 @@ def _geojson_finish(grid, chunk, ov, object_classes, threshold,
     """Fused (segment) -> border-dedup -> annotate kernel chain, emitting
     one annotation record per tile (NULL for empty, the reference's
     scalar-0 sentinel)."""
-    import json
-
-    from ..kernels.annotate import (annotation_offset,
-                                    annotation_offset_nd,
-                                    labels_to_annotations,
-                                    labels_to_annotations_3d)
-    from ..kernels.halo import tile_origin
-
-    kwargs = dict(seg_kwargs or {})
-    classes_map = {0: "cell"} if object_classes is None else object_classes
+    segment = (None if seg is None else
+               segment_stage(seg, dict(seg_kwargs or {}), returns_classes))
+    dedup = dedup_stage(grid, ov, threshold)
+    annotate = annotate_stage(grid, chunk, ov, object_classes)
 
     def finish(tile, cls, loc):
-        if seg is not None:
-            tile, cls = _split_seg_output(seg(tile, **kwargs),
-                                          returns_classes)
-        removed = remove_overlapped_objects(tile, ov, threshold, loc, grid)
-        if cls is not None:
-            cls = np.stack([zero_classes_where_removed(removed, p)
-                            for p in cls])
-        origin = tile_origin(loc, grid, chunk, ov)
-        if removed.ndim == 2:
-            off = annotation_offset(loc, origin, ov)
-            ann = labels_to_annotations(removed, classes_map,
-                                        classes=cls, offset=off)
-        else:  # 3D extension: footprint contour + zRange property
-            off = annotation_offset_nd(loc, origin, ov)
-            ann = labels_to_annotations_3d(removed, classes_map,
-                                           classes=cls, offset=off)
-        return [{"cz": loc[0] if len(loc) == 3 else None,
-                 "cy": loc[-2], "cx": loc[-1],
-                 "annotation": None if ann is None else json.dumps(ann)}]
+        if segment is not None:
+            tile, cls = segment(tile, cls, loc)
+        return annotate(*dedup(tile, cls, loc), loc)
 
     return finish
+
+
+def _check_annotation_nd(nd: int) -> None:
+    if nd not in (2, 3):
+        raise NotImplementedError(
+            f"annotation supports 2D (reference parity) and 3D "
+            f"(footprint+zRange extension), got {nd}D")
 
 
 def labels2geojson(ts: TileSet, overlaps: Union[int, List[int]] = 50,
@@ -212,24 +162,17 @@ def labels2geojson(ts: TileSet, overlaps: Union[int, List[int]] = 50,
     Physical plan: dedup+annotate fuse into ONE Python pass; with
     ``pre_overlapped=False`` the pad+emit of the halo exchange fuses in
     front (2 passes, 1 shuffle total)."""
-    from .halo import fused_exchange_records, map_tiles_records
-    from .annotate_ops import ANNOTATION_SCHEMA
-    if ts.nd not in (2, 3):
-        raise NotImplementedError(
-            f"annotation supports 2D (reference parity) and 3D "
-            f"(footprint+zRange extension), got {ts.nd}D")
+    _check_annotation_nd(ts.nd)
     if pre_overlapped:
-        ov = ts.overlaps
-        finish = _geojson_finish(ts.grid, ts.chunk_shape, ov,
+        finish = _geojson_finish(ts.grid, ts.chunk_shape, ts.overlaps,
                                  object_classes, threshold)
         return map_tiles_records(ts, finish, ANNOTATION_SCHEMA)
     ov = _norm_overlaps(overlaps, ts.nd)
     finish = _geojson_finish(ts.grid, ts.chunk_shape, ov,
                              object_classes, threshold)
-
-    pre = _pad_pre(ts.chunk_shape)
-
-    return fused_exchange_records(ts, ov, pre, finish, ANNOTATION_SCHEMA)
+    return exchange_records_from_pieces(
+        emit_pieces(ts, ov, pad_stage(ts.chunk_shape)), ts.nd, ts.grid,
+        finish, ANNOTATION_SCHEMA)
 
 
 def image2geojson(ts: TileSet, seg_fn: Optional[Callable] = None,
@@ -242,22 +185,15 @@ def image2geojson(ts: TileSet, seg_fn: Optional[Callable] = None,
     ``relabeling.py:279-309``) — fused into 2 Python passes / 1 shuffle:
     mapInPandas(pad+emit) -> groupBy(key) -> applyInPandas(assemble+
     segment+dedup+annotate)."""
-    from .halo import fused_exchange_records
-    from .annotate_ops import ANNOTATION_SCHEMA
-    if ts.nd not in (2, 3):
-        raise NotImplementedError(
-            f"annotation supports 2D (reference parity) and 3D "
-            f"(footprint+zRange extension), got {ts.nd}D")
+    _check_annotation_nd(ts.nd)
     ov = _norm_overlaps(overlaps, ts.nd)
-    fn = seg_fn or default_segment_fn
     finish = _geojson_finish(ts.grid, ts.chunk_shape, ov, object_classes,
-                             threshold, seg=fn,
+                             threshold, seg=seg_fn or default_segment_fn,
                              returns_classes=returns_classes,
                              seg_kwargs=segmentation_fn_kwargs)
-
-    pre = _pad_pre(ts.chunk_shape)
-
-    return fused_exchange_records(ts, ov, pre, finish, ANNOTATION_SCHEMA)
+    return exchange_records_from_pieces(
+        emit_pieces(ts, ov, pad_stage(ts.chunk_shape)), ts.nd, ts.grid,
+        finish, ANNOTATION_SCHEMA)
 
 
 __all__ = ["prepare_input", "image2labels", "labels2geojson",

@@ -12,21 +12,26 @@ Each operator is a thin Spark wrapper over a pure-NumPy kernel from
   dictionary into a narrow remap.  This replaces the reference's explicit
   driver-side barrier (``relabeling.py:331``) and its O(L^2) ``list.index``
   remap (``chunkops.py:104-113``).
+
+The segment, dedup and merge stage kernels come from
+``kernels/stages.py``, shared with the fused chains in
+``operators/pipeline.py``; every per-tile pass runs through
+``operators/halo._per_tile``.
 """
 from __future__ import annotations
 
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 from ..kernels.ccl import segment_fn as default_segment_fn
-from ..kernels.relabel import (merge_tiles as merge_kernel,
-                               remove_overlapped_objects, sort_indices,
-                               zero_classes_where_removed)
-from ..sources.tiles import TileSet, key_cols
-from .halo import halo_exchange, map_tiles, trim_overlap
+from ..kernels.relabel import sort_indices
+from ..kernels.stages import (dedup_stage, merge_stage, segment_stage,
+                              split_seg_output)
+from ..sources.tiles import (TILE_SCHEMA, TileSet, key_cols, pdf_classes,
+                             pdf_tile, tile_record)
+from .halo import _per_tile, halo_exchange, map_tiles, trim_overlap
 
 
 def segment_overlapped_input(ts: TileSet,
@@ -47,20 +52,10 @@ def segment_overlapped_input(ts: TileSet,
     """
     fn = seg_fn or default_segment_fn
     kwargs = dict(segmentation_fn_kwargs or {})
-    nd = ts.nd
-
     if extra_tiles:
         return _segment_with_aligned_kwargs(ts, fn, kwargs, returns_classes,
                                             extra_tiles)
-
-    def fn_tile(tile, cls, loc):
-        out = fn(tile, **kwargs)
-        out = np.asarray(out)
-        if returns_classes:
-            return out[0].astype(np.int64), out[1:].astype(np.int64)
-        return out.astype(np.int64), None
-
-    return map_tiles(ts, fn_tile)
+    return map_tiles(ts, segment_stage(fn, kwargs, returns_classes))
 
 
 def _segment_with_aligned_kwargs(ts: TileSet, fn, kwargs: dict,
@@ -72,9 +67,6 @@ def _segment_with_aligned_kwargs(ts: TileSet, fn, kwargs: dict,
     payload becomes an ndarray kwarg of the segmentation function —
     the reference's dask-array kwarg threading (``relabeling.py:28-36``).
     """
-    import pandas as pd
-    from ..sources.tiles import TILE_FIELDS, TILE_SCHEMA, pdf_tile, \
-        tile_record
     nd = ts.nd
     keys = key_cols(nd)
     names = sorted(extra_tiles)
@@ -84,57 +76,29 @@ def _segment_with_aligned_kwargs(ts: TileSet, fn, kwargs: dict,
             *keys, F.col("data").alias(f"kw_{name}"))
         df = df.join(other_df, on=keys)
 
-    def gen(batches):
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                tile = pdf_tile(row, nd)
-                extra = {name: np.asarray(row[f"kw_{name}"],
-                                          dtype=np.int64).reshape(tile.shape)
-                         for name in names}
-                out = np.asarray(fn(tile, **extra, **kwargs))
-                loc = tuple(int(row[c]) for c in keys)
-                if returns_classes:
-                    recs.append(tile_record(loc, out[0].astype(np.int64),
-                                            out[1:].astype(np.int64)))
-                else:
-                    recs.append(tile_record(loc, out.astype(np.int64)))
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in TILE_FIELDS])
+    def segment(row, loc):
+        tile = pdf_tile(row, nd)
+        extra = {name: np.asarray(row[f"kw_{name}"],
+                                  dtype=np.int64).reshape(tile.shape)
+                 for name in names}
+        return [tile_record(loc, *split_seg_output(
+            fn(tile, **extra, **kwargs), returns_classes))]
 
-    return ts.with_df(df.mapInPandas(gen, TILE_SCHEMA))
+    return ts.with_df(_per_tile(df, nd, ts.grid, segment, TILE_SCHEMA))
 
 
 def remove_overlapped_labels(ts: TileSet, threshold: float = 0.5
                              ) -> TileSet:
     """Border dedup + deterministic global offset (narrow, no shuffle).
     Reference ``relabeling.py:50-76``."""
-    nd, grid, ov = ts.nd, ts.grid, ts.overlaps
-
-    def fn(tile, cls, loc):
-        removed = remove_overlapped_objects(tile, ov, threshold, loc, grid)
-        new_cls = None
-        if cls is not None:
-            new_cls = np.stack([zero_classes_where_removed(removed, p)
-                                for p in cls])
-        return removed, new_cls
-
-    return map_tiles(ts, fn)
+    return map_tiles(ts, dedup_stage(ts.grid, ts.overlaps, threshold))
 
 
 def merge_overlapped_tiles(ts: TileSet) -> TileSet:
     """Second halo exchange + neighbor paste + trim (one shuffle).
     Reference ``relabeling.py:79-99``."""
-    nd, grid, ov = ts.nd, ts.grid, ts.overlaps
-    exchanged = halo_exchange(ts, ov)
-
-    def fn(expanded, cls, loc):
-        merged = merge_kernel(expanded, ov, loc, grid, classes=cls)
-        if cls is not None:
-            return merged[0], merged[1:]
-        return merged, None
-
-    merged = map_tiles(exchanged, fn)
+    ov = ts.overlaps
+    merged = map_tiles(halo_exchange(ts, ov), merge_stage(ts.grid, ov))
     # merge_kernel already stripped the exchange halo; tiles are back to the
     # pre-exchange (prepare-overlapped) geometry
     merged = merged.with_df(merged.df, overlaps=ov)
@@ -182,24 +146,13 @@ def sort_label_indices(ts: TileSet, distributed: bool = False) -> TileSet:
                 F.struct("label", "id"))).alias("_dict")))
     joined = ts.df.join(frag, list(keys))
 
-    def gen(batches):
-        import pandas as pd
-        from ..sources.tiles import TILE_FIELDS, pdf_tile, pdf_classes, \
-            tile_record
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                tile = pdf_tile(row, nd)
-                cls = pdf_classes(row, nd)
-                loc = tuple(int(row[c]) for c in keys)
-                ents = row["_dict"]
-                labs = np.array([e["label"] for e in ents], dtype=np.int64)
-                ids = np.array([e["id"] for e in ents], dtype=np.int64)
-                remapped = ids[np.searchsorted(labs, tile)] \
-                    .astype(tile.dtype)
-                recs.append(tile_record(loc, remapped, cls))
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in TILE_FIELDS])
+    def remap(row, loc):
+        tile = pdf_tile(row, nd)
+        cls = pdf_classes(row, nd)
+        ents = row["_dict"]
+        labs = np.array([e["label"] for e in ents], dtype=np.int64)
+        ids = np.array([e["id"] for e in ents], dtype=np.int64)
+        remapped = ids[np.searchsorted(labs, tile)].astype(tile.dtype)
+        return [tile_record(loc, remapped, cls)]
 
-    from ..sources.tiles import TILE_SCHEMA
-    return ts.with_df(joined.mapInPandas(gen, TILE_SCHEMA))
+    return ts.with_df(_per_tile(joined, nd, ts.grid, remap, TILE_SCHEMA))

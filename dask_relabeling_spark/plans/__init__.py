@@ -67,6 +67,20 @@ _CHANGED = [
     ("ann_ivfpq_query", 17),
     ("ann_ivfpq_topk", 17),
     ("ann_recall_panel", 17),
+    # round 18 (simplicity): tile operators collapsed onto one per-tile
+    # pass and one grouped exchange pass (operators/halo.py) —
+    # implementation changed, plans identical (plans/r18 dumps)
+    ("relabel_components_summary", 18),
+    ("relabel_components", 18),
+    ("relabel_annotations", 18),
+    ("relabel_annotations_summary", 18),
+    ("relabel_annotations_tile_interior_counts", 18),
+    ("relabel_sorted_label_stats", 18),
+    ("relabel_components_3d", 18),
+    ("relabel_annotations_3d", 18),
+    ("relabel_components_3d_interior", 18),
+    ("relabel_annotations_3d_summary", 18),
+    ("relabel_annotations_3d_tile_counts", 18),
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(

@@ -22,19 +22,26 @@ within the 16 px halo (asserted by
 tests/test_oracle_parity.py::test_flagship_mask_contract, so a testdata
 regeneration that densifies the mask fails at the contract, not as an
 opaque hash mismatch).
+
+The mask builders emit halo pieces straight out of the bitmap expansion
+(``emit_piece_records``), and every terminal composes the operator
+layer's passes directly over them: ``image2labels_from_pieces`` (two
+exchanges) for the label queries, ``_annotations`` (one fused
+segment -> dedup -> annotate exchange) for the six annotation queries.
 """
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernels.ccl import segment_fn
+from ..operators.annotate_ops import ANNOTATION_SCHEMA, GEOJSON_SPARK_SCHEMA
 from ..operators.halo import (PIECE_SCHEMA, apply_by_tile_key,
-                              emit_piece_records)
-from ..operators.pipeline import image2labels_from_pieces
+                              emit_piece_records,
+                              exchange_records_from_pieces)
+from ..operators.pipeline import _geojson_finish, image2labels_from_pieces
 from ..sources.tiles import TILE_SCHEMA, TileSet, tile_record
 from .relational import register, t
 
@@ -114,6 +121,21 @@ def _labeled_2d(spark: SparkSession, sf_dir: str) -> TileSet:
     return image2labels_from_pieces(
         pieces, 2, GRID, (CHUNK, CHUNK), (H, W), spark,
         overlaps=OVERLAP, threshold=0.05)
+
+
+def _annotations(spark: SparkSession, sf_dir: str, nd: int) -> DataFrame:
+    """``image2geojson``'s fused segment -> dedup -> annotate exchange
+    over the 2D or 3D flagship mask's builder-emitted pieces: one
+    shuffle, one ``ANNOTATION_SCHEMA`` row per tile."""
+    if nd == 2:
+        pieces = _mask_tiles(spark, sf_dir, as_pieces=True)
+        grid, chunk, ov = GRID, (CHUNK, CHUNK), (OVERLAP, OVERLAP)
+    else:
+        pieces = _mask_tiles_3d(spark, sf_dir)
+        grid, chunk, ov = GRID3, CHUNK3, OVERLAP3
+    finish = _geojson_finish(grid, chunk, ov, None, 0.05, seg=segment_fn)
+    return exchange_records_from_pieces(pieces, nd, grid, finish,
+                                        ANNOTATION_SCHEMA)
 
 
 def _ccl_ctes() -> str:
@@ -235,12 +257,12 @@ OVERLAP3 = (0, 64, 64)
 GRID3 = (1, H3 // CHUNK3[1], W3 // CHUNK3[2])
 
 
-def _mask_tiles_3d(spark: SparkSession, sf_dir: str,
-                   as_pieces: bool = False):
+def _mask_tiles_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same JVM-side bitmap partial aggregation as the 2D builder, with
     64-bit words: 600 k voxel points collapse to <= volume/64 (= 61 k)
     ``(tile, word)`` rows before the shuffle, and Python only expands
-    words -> ndarray once per tile."""
+    words -> ndarray once per tile, emitting its halo pieces directly
+    (``PIECE_SCHEMA`` rows)."""
     li = t(spark, sf_dir, "lineitem")
     local = ((F.col("z") * (CHUNK3[1] * CHUNK3[2]))
              + (F.col("y") % CHUNK3[1]) * CHUNK3[2]
@@ -266,12 +288,6 @@ def _mask_tiles_3d(spark: SparkSession, sf_dir: str,
                              bitorder="little") \
             .astype(np.int64).reshape(CHUNK3)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        loc = (int(key[0]), int(key[1]), int(key[2]))
-        return pd.DataFrame.from_records(
-            [tile_record(loc, expand(pdf))],
-            columns=[f.name for f in TILE_SCHEMA.fields])
-
     def build_pieces(key, pdf: pd.DataFrame) -> pd.DataFrame:
         loc = (int(key[0]), int(key[1]), int(key[2]))
         return pd.DataFrame.from_records(
@@ -284,12 +300,8 @@ def _mask_tiles_3d(spark: SparkSession, sf_dir: str,
         (F.col("id") % GRID3[2]).cast("int").alias("cx"),
         F.lit(-1).cast("int").alias("word"),
         F.lit(0).cast("long").alias("bits"))
-    src = wordrows.unionByName(grid_df)
-    if as_pieces:
-        return apply_by_tile_key(src, 3, GRID3, build_pieces, PIECE_SCHEMA)
-    tiles_df = apply_by_tile_key(src, 3, GRID3, build, TILE_SCHEMA)
-    return TileSet(df=tiles_df, nd=3, grid=GRID3, chunk_shape=CHUNK3,
-                   overlaps=(0, 0, 0), image_shape=(D3, H3, W3))
+    return apply_by_tile_key(wordrows.unionByName(grid_df), 3, GRID3,
+                             build_pieces, PIECE_SCHEMA)
 
 
 def _ccl3_ctes() -> str:
@@ -412,7 +424,7 @@ def relabel_components_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreground-voxel and touching-object counts of the merged field,
     replayed by the full checkerboard-parity ownership oracle over
     the 6-connected CCL closure (``_ownership3_ctes``)."""
-    pieces = _mask_tiles_3d(spark, sf_dir, as_pieces=True)
+    pieces = _mask_tiles_3d(spark, sf_dir)
     labeled = image2labels_from_pieces(
         pieces, 3, GRID3, CHUNK3, (D3, H3, W3), spark,
         overlaps=OVERLAP3, threshold=0.05)
@@ -507,15 +519,7 @@ def relabel_annotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only): the oracle replays the full checkerboard-parity
     ownership, band-touchers included — see
     ``_annotations_ownership_sql`` for the exactness argument."""
-    from ..operators.annotate_ops import ANNOTATION_SCHEMA
-    from ..operators.halo import exchange_records_from_pieces
-    from ..operators.pipeline import _geojson_finish
-    from ..kernels.ccl import segment_fn
-    pieces = _mask_tiles(spark, sf_dir, as_pieces=True)
-    finish = _geojson_finish(GRID, (CHUNK, CHUNK), (OVERLAP, OVERLAP),
-                             None, 0.05, seg=segment_fn)
-    ann = exchange_records_from_pieces(pieces, 2, GRID, finish,
-                                       ANNOTATION_SCHEMA)
+    ann = _annotations(spark, sf_dir, 2)
     return (ann.select(
         "cy", "cx",
         F.coalesce(F.json_array_length(
@@ -553,15 +557,7 @@ def relabel_annotations_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only): the oracle replays per-tile ownership via
     ``_ownership3_ctes`` and keeps components whose footprint has
     >= 2 (y, x) cells (the '< 2 contour points' rule)."""
-    from ..operators.annotate_ops import ANNOTATION_SCHEMA
-    from ..operators.halo import exchange_records_from_pieces
-    from ..operators.pipeline import _geojson_finish
-    from ..kernels.ccl import segment_fn
-    pieces = _mask_tiles_3d(spark, sf_dir, as_pieces=True)
-    finish = _geojson_finish(GRID3, CHUNK3, OVERLAP3,
-                             None, 0.05, seg=segment_fn)
-    ann = exchange_records_from_pieces(pieces, 3, GRID3, finish,
-                                       ANNOTATION_SCHEMA)
+    ann = _annotations(spark, sf_dir, 3)
     feats = F.from_json("annotation", "STRUCT<features: ARRAY<STRUCT<"
                         "properties: STRUCT<zRange: ARRAY<BIGINT>>>>>")
     return (ann.select(
@@ -602,16 +598,7 @@ def relabel_annotations_summary(spark: SparkSession, sf_dir: str
     dropped by the reference's own "< 2 points" rule,
     kernels/annotate.py).  The oracle re-derives exactly that from the
     shared recursive-CTE closure."""
-    from ..operators.annotate_ops import (ANNOTATION_SCHEMA,
-                                          GEOJSON_SPARK_SCHEMA)
-    from ..operators.halo import exchange_records_from_pieces
-    from ..operators.pipeline import _geojson_finish
-    from ..kernels.ccl import segment_fn
-    pieces = _mask_tiles(spark, sf_dir, as_pieces=True)
-    finish = _geojson_finish(GRID, (CHUNK, CHUNK), (OVERLAP, OVERLAP),
-                             None, 0.05, seg=segment_fn)
-    ann = exchange_records_from_pieces(pieces, 2, GRID, finish,
-                                       ANNOTATION_SCHEMA)
+    ann = _annotations(spark, sf_dir, 2)
     ring = F.col("f.geometry.coordinates")[0]
     xs = F.transform(ring, lambda p: p[0])
     ys = F.transform(ring, lambda p: p[1])
@@ -662,7 +649,7 @@ def relabel_components_3d_interior(spark: SparkSession, sf_dir: str
     from its own component set, so surviving border objects leave both
     frames and dropped ones were never in either.  Output: bbox +
     voxel count per interior component, label-id-invariant."""
-    pieces = _mask_tiles_3d(spark, sf_dir, as_pieces=True)
+    pieces = _mask_tiles_3d(spark, sf_dir)
     labeled = image2labels_from_pieces(
         pieces, 3, GRID3, CHUNK3, (D3, H3, W3), spark,
         overlaps=OVERLAP3, threshold=0.05)
@@ -734,15 +721,7 @@ def relabel_annotations_3d_summary(spark: SparkSession, sf_dir: str
     component boxes.  Components whose footprint has a single (y, x)
     cell are dropped on both sides (the reference's own '< 2 contour
     points' rule)."""
-    from ..operators.annotate_ops import ANNOTATION_SCHEMA
-    from ..operators.halo import exchange_records_from_pieces
-    from ..operators.pipeline import _geojson_finish
-    from ..kernels.ccl import segment_fn
-    pieces = _mask_tiles_3d(spark, sf_dir, as_pieces=True)
-    finish = _geojson_finish(GRID3, CHUNK3, OVERLAP3,
-                             None, 0.05, seg=segment_fn)
-    ann = exchange_records_from_pieces(pieces, 3, GRID3, finish,
-                                       ANNOTATION_SCHEMA)
+    ann = _annotations(spark, sf_dir, 3)
     feats = F.from_json(
         "annotation",
         "STRUCT<features: ARRAY<STRUCT<"
@@ -811,16 +790,7 @@ def relabel_annotations_tile_interior_counts(spark: SparkSession,
     ownership (the genuinely parity-dependent remainder) stays
     rows-only.  1-pixel components are dropped on both sides (the
     '< 2 contour points' rule)."""
-    from ..operators.annotate_ops import (ANNOTATION_SCHEMA,
-                                          GEOJSON_SPARK_SCHEMA)
-    from ..operators.halo import exchange_records_from_pieces
-    from ..operators.pipeline import _geojson_finish
-    from ..kernels.ccl import segment_fn
-    pieces = _mask_tiles(spark, sf_dir, as_pieces=True)
-    finish = _geojson_finish(GRID, (CHUNK, CHUNK), (OVERLAP, OVERLAP),
-                             None, 0.05, seg=segment_fn)
-    ann = exchange_records_from_pieces(pieces, 2, GRID, finish,
-                                       ANNOTATION_SCHEMA)
+    ann = _annotations(spark, sf_dir, 2)
     ring = F.col("f.geometry.coordinates")[0]
     xs = F.transform(ring, lambda p: p[0])
     ys = F.transform(ring, lambda p: p[1])
@@ -884,15 +854,7 @@ def relabel_annotations_3d_tile_counts(spark: SparkSession,
     interior features per EMITTING tile.  With this, the only unchecked
     content anywhere in the tile surface is band-touching ownership —
     the checkerboard-parity decision itself."""
-    from ..operators.annotate_ops import ANNOTATION_SCHEMA
-    from ..operators.halo import exchange_records_from_pieces
-    from ..operators.pipeline import _geojson_finish
-    from ..kernels.ccl import segment_fn
-    pieces = _mask_tiles_3d(spark, sf_dir, as_pieces=True)
-    finish = _geojson_finish(GRID3, CHUNK3, OVERLAP3,
-                             None, 0.05, seg=segment_fn)
-    ann = exchange_records_from_pieces(pieces, 3, GRID3, finish,
-                                       ANNOTATION_SCHEMA)
+    ann = _annotations(spark, sf_dir, 3)
     feats_schema = ("STRUCT<features: ARRAY<STRUCT<"
                     "geometry: STRUCT<coordinates: "
                     "ARRAY<ARRAY<ARRAY<BIGINT>>>>>>>")

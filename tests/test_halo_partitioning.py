@@ -3,6 +3,7 @@ Murmur3 replay must match Spark's HashPartitioning exactly, the salt table
 must place tile L on shuffle partition L mod n, and the salted groupBy must
 reuse the pinned exchange (one Exchange, no AQE re-coalescing)."""
 import itertools
+import warnings
 
 import pandas as pd
 import pytest
@@ -71,3 +72,23 @@ def test_apply_by_tile_key_perfect_spread_3d(spark):
         lin = (cz * dims[1] + cy) * dims[2] + cx
         parts.add(_mmh3_int32(salts[lin % n]) % n)
     assert len(parts) == n
+
+
+@pytest.mark.parametrize("grid", [(2, 2), (4, 4)])
+def test_apply_by_tile_key_infers_eval_type_without_warning(spark, grid):
+    # a partly hinted (key, pdf: pd.DataFrame) kernel — the shape of
+    # every tile kernel — must not make applyInPandas warn that it
+    # cannot infer the eval type, on the plain (2x2) or salted (4x4)
+    # branch
+    df = spark.range(grid[0] * grid[1]).select(
+        (F.col("id") / grid[1]).cast("int").alias("cy"),
+        (F.col("id") % grid[1]).cast("int").alias("cx"))
+
+    def count_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"n": [len(pdf)]})
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = apply_by_tile_key(df, 2, grid, count_group, "n long")
+    assert not [w for w in caught if "eval type" in str(w.message)]
+    assert sorted(r.n for r in out.collect()) == [1] * (grid[0] * grid[1])

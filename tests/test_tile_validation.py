@@ -156,3 +156,44 @@ def test_chunk_loud_preserves_exception_type():
         _chunk_loud((0, 0),
                     lambda: (_ for _ in ()).throw(MultiArg(1, 2)))
     assert isinstance(ei.value.__cause__, MultiArg)
+
+
+def _out_of_grid(spark):
+    """A 2x2 label TileSet whose (1, 1) row carries the key (1, 5)."""
+    from pyspark.sql import functions as F
+
+    from dask_relabeling_spark import from_array
+    img = np.zeros((8, 8), dtype=np.int64)
+    img[1:3, 1:3] = 1
+    img[5:7, 5:7] = 2
+    ts = from_array(spark, img, chunk_shape=(4, 4))
+    bad = (F.col("cy") == 1) & (F.col("cx") == 1)
+    return ts.with_df(ts.df.withColumn(
+        "cx", F.when(bad, F.lit(5)).otherwise(F.col("cx"))))
+
+
+def _annotate(ts):
+    from dask_relabeling_spark import annotate_labeled_tiles
+    return annotate_labeled_tiles(ts)
+
+
+def _sort_distributed(ts):
+    from dask_relabeling_spark import sort_label_indices
+    return sort_label_indices(ts, distributed=True).df
+
+
+def _segment_aligned(ts):
+    from dask_relabeling_spark import segment_overlapped_input
+    return segment_overlapped_input(
+        ts, seg_fn=lambda tile, mask: tile * mask,
+        extra_tiles={"mask": ts}).df
+
+
+@pytest.mark.parametrize("run", [_annotate, _sort_distributed,
+                                 _segment_aligned])
+def test_out_of_grid_key_fails_loudly_on_every_per_tile_path(spark, run):
+    # every per-tile path validates the key: an out-of-grid row must
+    # not pass silently (annotation would compute wrong offsets)
+    with pytest.raises(Exception, match=r"tile \(cy=1, cx=5\): location "
+                                        r"outside the declared grid"):
+        run(_out_of_grid(spark)).collect()

@@ -357,7 +357,8 @@ def run_media_fuzz(spark, rng: random.Random, quiet: bool = True):
 #
 #   expect "loud"  — every stage must RAISE, and the error must carry
 #                    chunk-coordinate context (sources/tiles.py checks,
-#                    operators/halo._chunk_loud / _assemble_one);
+#                    operators/halo._per_tile / _chunk_loud /
+#                    _assemble_one);
 #                    silent acceptance is a divergence.  Pre-round-14,
 #                    a -1 dim was INFERRED by np.reshape, a zero-dim
 #                    tile vanished, a duplicate chunk key was
