@@ -189,6 +189,14 @@ def sort_indices(labeled: np.ndarray,
 
     Vectorized replacement for the reference's O(L^2) ``list.index`` scan
     (``chunkops.py:104-113``): ``np.searchsorted`` against the (already
-    sorted) global dictionary.
+    sorted) global dictionary.  A label absent from the dictionary raises
+    ``ValueError`` naming it (the reference's ``list.index`` raises too);
+    a bare ``searchsorted`` would hand it a neighbour's rank silently.
     """
-    return np.searchsorted(sorted_unique, labeled).astype(labeled.dtype)
+    ranks = np.searchsorted(sorted_unique, labeled)
+    found = np.take(sorted_unique, ranks, mode="clip") == labeled
+    if not found.all():
+        missing = np.unique(labeled[~found])
+        raise ValueError(f"{missing.size} label(s) missing from the sorted "
+                         f"label dictionary: {missing[:8].tolist()}")
+    return ranks.astype(labeled.dtype)

@@ -6,12 +6,15 @@ Each operator is a thin Spark wrapper over a pure-NumPy kernel from
 * ``segment`` / ``remove``: narrow ``mapInPandas`` — zero shuffles, the
   kernels fuse into one Python stage per tile;
 * ``merge``: one halo exchange (margins shuffle) feeding the paste kernel;
-* ``sort_label_indices``: distributed ``explode -> distinct`` for the global
-  label dictionary (partial + final hash agg; never ships pixels to the
-  driver — only the distinct label set), then a broadcast of the sorted
-  dictionary into a narrow remap.  This replaces the reference's explicit
-  driver-side barrier (``relabeling.py:331``) and its O(L^2) ``list.index``
-  remap (``chunkops.py:104-113``).
+* ``sort_label_indices``: the input tiles are materialized once
+  (``scoped_persist``), each tile contributes its ``np.unique`` labels
+  (one small row per tile; pixels never reach the driver or become JVM
+  rows), the driver merges them into the sorted dictionary and
+  broadcasts it into a narrow remap over the persisted tiles — so the
+  upstream pipeline runs once, not once for the dictionary and again
+  for the remap.  This replaces the reference's explicit driver-side
+  barrier (``relabeling.py:331``) and its O(L^2) ``list.index`` remap
+  (``chunkops.py:104-113``).
 
 The segment, dedup and merge stage kernels come from
 ``kernels/stages.py``, shared with the fused chains in
@@ -24,14 +27,20 @@ from typing import Callable, Optional
 
 import numpy as np
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..kernels.ccl import segment_fn as default_segment_fn
 from ..kernels.relabel import sort_indices
 from ..kernels.stages import (dedup_stage, merge_stage, segment_stage,
                               split_seg_output)
+from ..session import scoped_persist
 from ..sources.tiles import (TILE_SCHEMA, TileSet, key_cols, pdf_classes,
                              pdf_tile, tile_record)
 from .halo import _per_tile, halo_exchange, map_tiles, trim_overlap
+
+# one row per tile: that tile's sorted unique labels
+_LABELS_SCHEMA = T.StructType([
+    T.StructField("labels", T.ArrayType(T.LongType(), False), False)])
 
 
 def segment_overlapped_input(ts: TileSet,
@@ -108,11 +117,18 @@ def merge_overlapped_tiles(ts: TileSet) -> TileSet:
 def sort_label_indices(ts: TileSet, distributed: bool = False) -> TileSet:
     """Dense re-index of all labels to 0..N in sorted order.
 
-    Default path: global dictionary = ``explode(data) -> distinct``
-    (distributed partial + final aggregation); only the distinct labels
-    (tiny vs pixels) reach the driver, are sorted, and ship back inside
-    the remap closure — the Spark rendition of a broadcast join against a
-    ``dense_rank`` dictionary.  Reference ``relabeling.py:312-346``.
+    The input tiles are persisted first (``scoped_persist``), so the
+    upstream pipeline (segment, dedup, exchanges, merge) runs once: the
+    dictionary action fills the cache and the returned remap reads it.
+    The returned frame is lazy, so the persist outlives this call; it is
+    dropped by ``release_persists()`` / ``persist_scope``, like every
+    other scoped persist.
+
+    Default path: every tile contributes its ``np.unique`` labels (one
+    small row per tile), the driver merges them into the sorted global
+    dictionary and broadcasts it into a narrow remap — the Spark
+    rendition of a broadcast join against a ``dense_rank`` dictionary.
+    Reference ``relabeling.py:312-346``.
 
     ``distributed=True`` is the scale path for when even the distinct
     label set is too large to collect/broadcast: dense ids come from
@@ -121,12 +137,18 @@ def sort_label_indices(ts: TileSet, distributed: bool = False) -> TileSet:
     only ITS OWN labels' dictionary entries back (shuffle is O(distinct
     labels per tile), not O(global dictionary) per task), and the remap
     runs per tile against that local fragment.  Results are identical.
+
+    Both remaps go through ``kernels.relabel.sort_indices``, which fails
+    loudly (chunk-attributed) on a label missing from the dictionary.
     """
+    nd = ts.nd
+    ts = ts.with_df(scoped_persist(ts.df))
     if not distributed:
-        uniq = (ts.df.select(F.explode("data").alias("label"))
-                .distinct().collect())
-        dictionary = np.sort(np.array([r.label for r in uniq],
-                                      dtype=np.int64))
+        uniq = _per_tile(ts.df, nd, ts.grid, lambda row, loc: [
+            {"labels": np.unique(pdf_tile(row, nd))}],
+            _LABELS_SCHEMA).toPandas()["labels"]
+        dictionary = np.unique(np.concatenate(
+            [np.zeros(0, dtype=np.int64), *uniq]))
         bc = ts.df.sparkSession.sparkContext.broadcast(dictionary)
 
         def fn(tile, cls, loc):
@@ -135,7 +157,6 @@ def sort_label_indices(ts: TileSet, distributed: bool = False) -> TileSet:
         return map_tiles(ts, fn)
 
     from ..functions.ids import dense_ids
-    nd = ts.nd
     keys = key_cols(nd)
     tile_labels = (ts.df.select(*keys, F.explode("data").alias("label"))
                    .distinct())
@@ -152,7 +173,7 @@ def sort_label_indices(ts: TileSet, distributed: bool = False) -> TileSet:
         ents = row["_dict"]
         labs = np.array([e["label"] for e in ents], dtype=np.int64)
         ids = np.array([e["id"] for e in ents], dtype=np.int64)
-        remapped = ids[np.searchsorted(labs, tile)].astype(tile.dtype)
+        remapped = ids[sort_indices(tile, labs)].astype(tile.dtype)
         return [tile_record(loc, remapped, cls)]
 
     return ts.with_df(_per_tile(joined, nd, ts.grid, remap, TILE_SCHEMA))

@@ -75,12 +75,16 @@ _CHANGED = [
     ("relabel_annotations", 18),
     ("relabel_annotations_summary", 18),
     ("relabel_annotations_tile_interior_counts", 18),
-    ("relabel_sorted_label_stats", 18),
     ("relabel_components_3d", 18),
     ("relabel_annotations_3d", 18),
     ("relabel_components_3d_interior", 18),
     ("relabel_annotations_3d_summary", 18),
     ("relabel_annotations_3d_tile_counts", 18),
+    # round 19 (optimization): sort_label_indices persists its input so
+    # the pipeline upstream of the sort runs once; the plan now reads
+    # the tiles through an InMemoryRelation (plans/r19 dumps), results
+    # identical; this flag supersedes the entry's round-18 one
+    ("relabel_sorted_label_stats", 19),
 ]
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(

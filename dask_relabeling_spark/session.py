@@ -7,6 +7,7 @@ import os
 import warnings
 from typing import Iterator
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 # DataFrames persisted by operators for intra-query reuse.  persist()
@@ -25,7 +26,12 @@ _SCOPED: dict[int, list[DataFrame]] = {}
 
 def scoped_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` that is released by the next
-    ``release_persists()`` call against the same SparkSession."""
+    ``release_persists()`` call against the same SparkSession.  A frame
+    whose plan is already cached (by the caller, or by an earlier scoped
+    persist) is returned unregistered, so a release never drops a cache
+    it does not own."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     _SCOPED.setdefault(id(df.sparkSession), []).append(df.persist())
     return df
 

@@ -54,6 +54,24 @@ def test_sort_label_indices_distributed_matches_driver(spark):
     assert any(v.max() > 0 for v in a.values())
 
 
+def test_sort_indices_missing_label_raises():
+    """A label absent from the dictionary must fail loudly, not take a
+    neighbour's rank (a bare searchsorted maps 5 to rank 2, past the
+    end)."""
+    import numpy as np
+    import pytest
+    from dask_relabeling_spark.kernels.relabel import sort_indices
+
+    with pytest.raises(ValueError, match=r"\[5\]"):
+        sort_indices(np.array([5]), np.array([0, 3]))
+    with pytest.raises(ValueError, match=r"\[2\]"):
+        sort_indices(np.array([0, 2, 3]), np.array([0, 3]))
+    ranks = sort_indices(np.array([[3, 0], [7, 3]], dtype=np.int32),
+                         np.array([0, 3, 7]))
+    assert ranks.dtype == np.int32
+    assert ranks.tolist() == [[1, 0], [2, 1]]
+
+
 def test_winnowing_shared_substring_guarantee(spark):
     """Winnowing invariant: two docs sharing a substring of length
     >= k + w - 1 must share at least one fingerprint; and the

@@ -15,7 +15,8 @@ import pytest
 from dask_relabeling_spark.operators.dedup import (
     minhash_lsh_pairs, ngram_jaccard_pairs, prefix_filtered_jaccard_pairs,
     simhash_neardup_pairs, tfidf_cosine_pairs)
-from dask_relabeling_spark.session import release_persists
+from dask_relabeling_spark.session import (release_persists,
+                                           scoped_persist)
 
 
 def _persistent_rdd_count(spark) -> int:
@@ -50,3 +51,36 @@ def test_scoped_persists_released(spark, docs):
 def test_release_is_idempotent(spark):
     release_persists()
     release_persists()
+
+
+@pytest.mark.parametrize("distributed", [False, True],
+                         ids=["driver", "distributed"])
+def test_sort_label_indices_persist_released(spark, distributed):
+    """``sort_label_indices`` persists its input so the upstream runs
+    once; the returned frame is lazy, so the persist lives until
+    ``release_persists()``, which must drop it."""
+    import numpy as np
+
+    from dask_relabeling_spark import from_array, sort_label_indices
+
+    rng = np.random.default_rng(3)
+    img = (rng.random((16, 16)) * 4).astype(np.int64) * 10
+    ts = from_array(spark, img, chunk_shape=(8, 8))
+    release_persists()
+    base = _persistent_rdd_count(spark)
+    out = sort_label_indices(ts, distributed=distributed)
+    out.df.write.format("noop").mode("overwrite").save()
+    assert _persistent_rdd_count(spark) > base
+    release_persists()
+    assert _persistent_rdd_count(spark) <= base
+
+
+def test_release_keeps_a_callers_cache(spark):
+    """A frame the caller cached is not registered by ``scoped_persist``,
+    so a release cannot drop a cache it does not own."""
+    df = spark.range(7).cache()
+    df.count()
+    assert scoped_persist(df) is df
+    release_persists()
+    assert df.storageLevel.useMemory
+    df.unpersist()

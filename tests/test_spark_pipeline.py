@@ -198,3 +198,53 @@ def test_from_pieces_path_equals_tile_table_path(spark):
     assert set(got) == set(exp)
     for loc in exp:
         assert np.array_equal(got[loc], exp[loc]), loc
+
+
+@pytest.mark.parametrize("distributed", [False, True],
+                         ids=["driver", "distributed"])
+def test_sort_runs_pipeline_once(spark, tmp_path, distributed):
+    """``image2labels -> sort_label_indices -> write_tile_store`` runs the
+    segmentation once per tile: the sort's dictionary pass and the
+    sink's remap share one materialized input instead of each re-running
+    the whole pipeline."""
+    from dask_relabeling_spark.kernels.ccl import segment_fn
+    from dask_relabeling_spark.session import release_persists
+    from dask_relabeling_spark.sources.tile_store import (read_tile_store,
+                                                          write_tile_store)
+    from dask_relabeling_spark.sources.tiles import from_array
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted_seg(tile):
+        calls.add(1)
+        return segment_fn(tile)
+
+    rng = np.random.default_rng(11)
+    mask = (rng.random((32, 32)) < 0.2).astype(np.int64)
+    ts = from_array(spark, mask, chunk_shape=(16, 16))
+    labels = image2labels(ts, seg_fn=counted_seg, overlaps=4,
+                          threshold=0.05)
+    out = tmp_path / "sorted"
+    write_tile_store(sort_label_indices(labels, distributed=distributed),
+                     str(out))
+    release_persists()
+    assert calls.value == 4
+    got = to_array(read_tile_store(spark, str(out)))
+    assert np.array_equal(np.unique(got), np.arange(got.max() + 1))
+
+
+@pytest.mark.parametrize("distributed", [False, True],
+                         ids=["driver", "distributed"])
+def test_sort_all_background(spark, distributed):
+    """An image with no objects sorts to all zeros, dtype kept."""
+    from dask_relabeling_spark.session import release_persists
+    from dask_relabeling_spark.sources.tiles import from_array
+
+    ts = from_array(spark, np.zeros((12, 10), dtype=np.int64),
+                    chunk_shape=(6, 5))
+    out = sort_label_indices(ts, distributed=distributed)
+    assert out.df.schema["data"].dataType == ts.df.schema["data"].dataType
+    got = to_array(out)
+    release_persists()
+    assert got.dtype == np.int64 and got.shape == (12, 10)
+    assert not got.any()
