@@ -7,21 +7,21 @@ so downstream consumers can ``from_json`` it into the nested struct schema
 (FIXTURES.md) or write it out as-is.
 
 ``zip_annotated_tiles`` reproduces the reference sink
-(``relabeling.py:126-163``): one ``{cy}-{cx}.geojson`` file per non-empty
-tile, zipped (DEFLATE-9).  Files are written executor-side (shared
-filesystem assumed, as any Spark file sink does); only the written *paths*
-are collected for the driver-side zip step.
+(``relabeling.py:126-163``): one ``{cz-}cy-cx.geojson`` entry per non-empty
+tile, zipped (DEFLATE-9).  The non-empty annotations are collected through
+the DataFrame (one SQL execution) and the zip is written on the driver, so
+no executor touches the filesystem; the driver holds the annotation text
+of the non-empty tiles (GeoJSON contours, not pixels) once.
 """
 from __future__ import annotations
 
-import os
 import pathlib
-import shutil
 import zipfile
 from datetime import datetime
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels.stages import annotate_stage
@@ -74,41 +74,31 @@ def annotate_labeled_tiles(ts: TileSet,
 def zip_annotated_tiles(annotations: DataFrame,
                         out_dir: Union[str, pathlib.Path, None] = None
                         ) -> pathlib.Path:
-    """Write per-tile ``.geojson`` files and zip them (reference
-    ``relabeling.py:126-163``, including the out-dir conventions: a fresh
-    directory is removed after zipping, a pre-existing one is kept)."""
+    """Zip one ``{cz-}cy-cx.geojson`` entry per non-empty tile into
+    ``<out_dir>.zip`` (reference ``relabeling.py:126-163``).  The rows are
+    collected before anything is written, so a failing upstream leaves no
+    file behind.  Out-dir conventions as in the reference: a pre-existing
+    ``out_dir`` also gets the loose files and is kept; a fresh one is
+    never created."""
+    now = datetime.now()
     if out_dir is None:
-        out_dir = "./annotations_output-" + \
-            datetime.now().strftime("%Y%m%d-%H%M%S")
+        out_dir = "./annotations_output-" + now.strftime("%Y%m%d-%H%M%S")
     out_dir = pathlib.Path(out_dir)
-    safe_to_remove = False
-    if not out_dir.is_dir():
-        os.makedirs(out_dir, exist_ok=True)
-        safe_to_remove = True
-
-    out_dir_str = str(out_dir)
-
-    def write_partition(rows):
-        written = []
-        for row in rows:
-            if row.annotation is None:
-                continue
-            loc = [row.cz, row.cy, row.cx]
-            name = "-".join(str(c) for c in loc if c is not None)
-            path = os.path.join(out_dir_str, name + ".geojson")
-            with open(path, "w") as fp:
-                fp.write(row.annotation)
-            written.append(path)
-        return iter(written)
-
-    paths = annotations.rdd.mapPartitions(write_partition).collect()
-
-    out_zip = pathlib.Path(out_dir_str + ".zip")
+    rows = annotations.where(F.col("annotation").isNotNull()).select(
+        "cz", "cy", "cx", "annotation").collect()
+    files = sorted(("-".join(str(c) for c in (r.cz, r.cy, r.cx)
+                             if c is not None) + ".geojson", r.annotation)
+                   for r in rows)
+    keep_loose = out_dir.is_dir()
+    out_zip = pathlib.Path(str(out_dir) + ".zip")
     with zipfile.ZipFile(out_zip, "w", zipfile.ZIP_DEFLATED,
                          compresslevel=9) as zf:
-        for p in sorted(paths):
-            zf.write(p, arcname=os.path.relpath(p, out_dir_str))
-
-    if safe_to_remove and out_dir.is_dir():
-        shutil.rmtree(out_dir)
+        for name, text in files:
+            data = text.encode()
+            info = zipfile.ZipInfo(name, now.timetuple()[:6])
+            info.external_attr = 0o644 << 16    # a bare name gets 0o600
+            # a ZipInfo entry does not inherit the archive's compression
+            zf.writestr(info, data, zf.compression, zf.compresslevel)
+            if keep_loose:
+                (out_dir / name).write_bytes(data)
     return out_zip

@@ -1,13 +1,15 @@
 """End-to-end Spark pipeline tests against the reference goldens — the
 Spark rendition of reference tests/test_relabeling.py:193-304."""
 import json
+import stat
+import zipfile
 
 import numpy as np
 import pytest
 
-from dask_relabeling_spark import (from_tiles, image2labels, labels2geojson,
-                                   sort_label_indices, to_array, to_tiles,
-                                   zip_annotated_tiles)
+from dask_relabeling_spark import (from_tiles, image2geojson, image2labels,
+                                   labels2geojson, sort_label_indices,
+                                   to_array, to_tiles, zip_annotated_tiles)
 from dask_relabeling_spark.operators.pipeline import prepare_input
 from dask_relabeling_spark.operators.relabel_ops import (
     remove_overlapped_labels, segment_overlapped_input)
@@ -111,7 +113,6 @@ def test_labels2geojson_and_zip_golden(spark, tmp_path):
 
     # sink round-trip (reference tests/test_relabeling.py:158-190)
     out_zip = zip_annotated_tiles(ann, out_dir=tmp_path / "anns")
-    import zipfile
     with zipfile.ZipFile(out_zip) as zf:
         names = sorted(zf.namelist())
         assert names == sorted(
@@ -248,3 +249,103 @@ def test_sort_all_background(spark, distributed):
     release_persists()
     assert got.dtype == np.int64 and got.shape == (12, 10)
     assert not got.any()
+
+
+def _squares_geojson(spark, shape=(64, 64), objects=True, seg_fn=None):
+    """Annotations of three squares in 32-px tiles, one square straddling
+    the border between the two tile rows (depth is never tiled)."""
+    from dask_relabeling_spark.sources.tiles import from_array
+    img = np.zeros(shape, dtype=np.int64)
+    if objects:
+        img[..., 4:12, 4:12] = 1
+        img[..., 28:36, 40:48] = 1
+        img[..., 44:60, 10:20] = 1
+    ts = from_array(spark, img, chunk_shape=(*shape[:-2], 32, 32))
+    return image2geojson(ts, seg_fn=seg_fn, overlaps=8)
+
+
+def _expected_entries(ann) -> dict:
+    """Entry name -> parsed FeatureCollection, from the annotation rows."""
+    return {"-".join(str(c) for c in (r.cz, r.cy, r.cx) if c is not None)
+            + ".geojson": json.loads(r.annotation)
+            for r in ann.collect() if r.annotation is not None}
+
+
+def _zip_entries(out_zip) -> dict:
+    with zipfile.ZipFile(out_zip) as zf:
+        return {n: json.loads(zf.read(n)) for n in zf.namelist()}
+
+
+def test_zip_sink_relative_out_dir_from_other_cwd(spark, tmp_path,
+                                                  monkeypatch):
+    """A relative out_dir resolves against the driver's cwd only: no task
+    writes a file, so the executors' cwd does not matter."""
+    ann = _squares_geojson(spark)
+    monkeypatch.chdir(tmp_path)
+    out_zip = zip_annotated_tiles(ann, "anns")
+    expected = _expected_entries(ann)
+    assert len(expected) >= 3
+    assert _zip_entries(tmp_path / out_zip) == expected
+    assert not (tmp_path / "anns").exists()
+
+
+def test_zip_sink_records_one_sql_execution(spark, tmp_path):
+    """The sink's one action runs through the DataFrame, so it shows up
+    in the SQL status store like every other operator."""
+    ann = _squares_geojson(spark)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    sql = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    before = sql.executionsCount()
+    zip_annotated_tiles(ann, tmp_path / "anns")
+    bus.waitUntilEmpty()
+    assert sql.executionsCount() - before == 1
+
+
+def test_zip_sink_failing_upstream_leaves_nothing(spark, tmp_path):
+    def broken_seg(tile):
+        raise RuntimeError("segmentation model crashed")
+
+    ann = _squares_geojson(spark, seg_fn=broken_seg)
+    out_dir = tmp_path / "anns"
+    with pytest.raises(Exception, match="segmentation model crashed"):
+        zip_annotated_tiles(ann, out_dir)
+    assert not out_dir.exists()
+    assert not (tmp_path / "anns.zip").exists()
+
+
+@pytest.mark.parametrize("shape,objects,preexisting", [
+    ((64, 64), True, True),
+    ((8, 64, 64), True, False),
+    ((64, 64), False, False),
+], ids=["preexisting_dir", "3d", "all_background"])
+def test_zip_sink_out_dir_contract(spark, tmp_path, shape, objects,
+                                   preexisting):
+    """Entries are ``{cz-}cy-cx.geojson`` in sorted order with mode 0o644;
+    a pre-existing out_dir also gets the loose files, byte-equal to the
+    entries, and is kept; a fresh one is never created."""
+    ann = _squares_geojson(spark, shape, objects)
+    out_dir = tmp_path / "anns"
+    if preexisting:
+        out_dir.mkdir()
+    out_zip = zip_annotated_tiles(ann, out_dir)
+    assert out_zip == tmp_path / "anns.zip"
+    expected = _expected_entries(ann)
+    assert all(len(n.split("-")) == len(shape) for n in expected)
+    assert bool(expected) == objects
+    with zipfile.ZipFile(out_zip) as zf:
+        assert zf.testzip() is None
+        infos = zf.infolist()
+        assert [i.filename for i in infos] == sorted(expected)
+        assert {i.filename: json.loads(zf.read(i)) for i in infos} \
+            == expected
+        assert all(i.compress_type == zipfile.ZIP_DEFLATED for i in infos)
+        assert all(stat.S_IMODE(i.external_attr >> 16) == 0o644
+                   for i in infos)
+        if preexisting:
+            assert sorted(p.name for p in out_dir.iterdir()) \
+                == sorted(expected)
+            for i in infos:
+                assert (out_dir / i.filename).read_bytes() == zf.read(i)
+        else:
+            assert not out_dir.exists()
