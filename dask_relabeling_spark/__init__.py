@@ -5,32 +5,51 @@ Public surface mirrors the reference's entry points
 (``/root/reference/relabel/__init__.py``) over a tile-table data model, plus
 the large-scale data-pipeline operators (dedup, similarity, text analysis,
 multimodal plumbing) that generalize the same parallel patterns.
+
+The root is lazy (PEP 562): each exported name is imported on first
+access, so ``python -m dask_relabeling_spark.worker_daemon`` and a worker
+that unpickles one library closure load no more than they use.
 """
-from .session import get_spark
-from .sources.tiles import TileSet, from_array, from_tiles, to_array, to_tiles
-from .operators.pipeline import (annotate_labeled_tiles, image2geojson,
-                                 image2labels, labels2geojson,
-                                 merge_overlapped_tiles, prepare_input,
-                                 remove_overlapped_labels,
-                                 segment_overlapped_input)
-from .operators.relabel_ops import sort_label_indices
-from .operators.annotate_ops import zip_annotated_tiles
-from .operators.asof import asof_join
-from .operators import dedup, multimodal, similarity, text
-from .functions.ids import dense_ids
-from .functions.skew import grouped_topk
-from .sources.bucketed import read_table, write_bucketed
-from .sources.tables import load_table
+import importlib
 
 __version__ = "0.1.0"
 
-__all__ = [
-    "get_spark", "TileSet", "from_array", "from_tiles", "to_array",
-    "to_tiles", "prepare_input", "image2labels", "image2geojson",
-    "labels2geojson", "segment_overlapped_input",
-    "remove_overlapped_labels", "merge_overlapped_tiles",
-    "annotate_labeled_tiles", "sort_label_indices", "zip_annotated_tiles",
-    "asof_join", "dense_ids", "grouped_topk", "write_bucketed",
-    "read_table", "load_table", "dedup", "similarity", "text",
-    "multimodal",
-]
+# exported name -> module that defines it (relative to this package)
+_EXPORTS = {
+    "get_spark": ".session",
+    "TileSet": ".sources.tiles", "from_array": ".sources.tiles",
+    "from_tiles": ".sources.tiles", "to_array": ".sources.tiles",
+    "to_tiles": ".sources.tiles",
+    "prepare_input": ".operators.pipeline",
+    "image2labels": ".operators.pipeline",
+    "image2geojson": ".operators.pipeline",
+    "labels2geojson": ".operators.pipeline",
+    "segment_overlapped_input": ".operators.pipeline",
+    "remove_overlapped_labels": ".operators.pipeline",
+    "merge_overlapped_tiles": ".operators.pipeline",
+    "annotate_labeled_tiles": ".operators.pipeline",
+    "sort_label_indices": ".operators.relabel_ops",
+    "zip_annotated_tiles": ".operators.annotate_ops",
+    "asof_join": ".operators.asof",
+    "dense_ids": ".functions.ids",
+    "grouped_topk": ".functions.skew",
+    "write_bucketed": ".sources.bucketed", "read_table": ".sources.bucketed",
+    "load_table": ".sources.tables",
+}
+_SUBMODULES = {name: f".operators.{name}"
+               for name in ("dedup", "multimodal", "similarity", "text")}
+
+__all__ = [*_EXPORTS, *_SUBMODULES]
+
+
+def __getattr__(name):
+    if name in _SUBMODULES:
+        value = importlib.import_module(_SUBMODULES[name], __name__)
+    elif name in _EXPORTS:
+        value = getattr(importlib.import_module(_EXPORTS[name], __name__),
+                        name)
+    else:
+        raise AttributeError(
+            f"module {__name__!r} has no attribute {name!r}")
+    globals()[name] = value
+    return value

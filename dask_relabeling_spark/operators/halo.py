@@ -214,7 +214,7 @@ def apply_by_tile_key(df: DataFrame, nd: int, grid, fn, schema):
     spark = df.sparkSession
     try:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # "auto" or unset on some deployments
+    except ValueError:  # "auto" on some deployments (it has a default)
         width = 0
     n = max(1, min(n_tiles, max(spark.sparkContext.defaultParallelism,
                                 width)))

@@ -17,6 +17,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import warn_once
+
 
 def _nonfinite(x: Column) -> Column:
     return x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
@@ -538,7 +540,8 @@ def _stored_metadata_is_small(spark, path: str) -> bool:
     """True when the stored table under ``path`` is small enough to
     collect whole — decided from the FS content summary (driver-side
     metadata, no Spark job).  Unknown/failed lookups answer False:
-    the engine-side selection is the safe default at scale."""
+    the engine-side selection is the safe default at scale, but it is
+    slower for a small quantizer, so a failed lookup warns once."""
     try:
         jvm = spark.sparkContext._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -546,7 +549,12 @@ def _stored_metadata_is_small(spark, path: str) -> bool:
             spark.sparkContext._jsc.hadoopConfiguration())
         return (fs.getContentSummary(hpath).getLength()
                 <= _COLLECT_MAX_METADATA_BYTES)
-    except Exception:
+    except Exception as exc:  # no JVM handle (Spark Connect), FS error
+        warn_once(
+            "similarity.stored_metadata",
+            "stored quantizer size lookup failed "
+            f"({type(exc).__name__}: {exc}); probing on the engine-side "
+            "path, which is slower for small quantizers")
         return False
 
 

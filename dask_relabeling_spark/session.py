@@ -4,10 +4,12 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
+import site
 import warnings
 from typing import Iterator
 
-from pyspark import StorageLevel
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 # DataFrames persisted by operators for intra-query reuse.  persist()
@@ -66,6 +68,67 @@ def persist_scope(spark: SparkSession) -> Iterator[None]:
         release_persists(spark)
 
 
+_WARNED: set[str] = set()
+
+
+def warn_once(key: str, message: str, stacklevel: int = 2) -> None:
+    """``warnings.warn(message)`` the first time ``key`` is seen in this
+    process: a lost fast path or a swallowed error is reported once,
+    not per query."""
+    if key not in _WARNED:
+        _WARNED.add(key)
+        warnings.warn(message, stacklevel=stacklevel + 1)
+
+
+_DAEMON_MODULE = "dask_relabeling_spark.worker_daemon"
+# the directory that holds the package: a worker imports it from there
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+
+
+def _worker_daemon(master: str, cwd: str | None, pythonpath: str,
+                   site_dirs: list[str]) -> tuple[str | None, str | None]:
+    """``(daemon module, None)`` when the Python workers of a session on
+    ``master`` can import ``worker_daemon``, else ``(None, reason)``.
+
+    The daemon is started as ``python -m`` in the JVM's ``cwd`` with
+    ``pythonpath`` on its path, so the package must sit in the cwd, on
+    ``PYTHONPATH`` or in a site-packages dir.  Only a local master is
+    trusted: a cluster's executors have another cwd and environment, and
+    a daemon that cannot import its module fails every Python task."""
+    if not re.fullmatch(r"local(\[.*\])?", master):
+        return None, f"master {master!r} is not local"
+    roots = [cwd, *pythonpath.split(os.pathsep), *site_dirs]
+    if any(r and os.path.realpath(r) == _PACKAGE_PARENT for r in roots):
+        return _DAEMON_MODULE, None
+    return None, (f"{_PACKAGE_PARENT} is not the working directory, on "
+                  "PYTHONPATH or in site-packages, so Python workers "
+                  "cannot import dask_relabeling_spark; add it to "
+                  "PYTHONPATH")
+
+
+def _daemon_module(master: str) -> str | None:
+    """``_worker_daemon`` for this process, warning once when the
+    worker daemon is not installed.  A running JVM keeps the cwd and
+    environment it was started with, so those are read from it."""
+    jvm = SparkContext._jvm
+    if jvm is None:
+        cwd, pythonpath = os.getcwd(), os.environ.get("PYTHONPATH", "")
+    else:
+        cwd = jvm.java.lang.System.getProperty("user.dir")
+        pythonpath = jvm.java.lang.System.getenv("PYTHONPATH") or ""
+    if os.environ.get("PYTHONSAFEPATH"):  # -m no longer puts cwd first
+        cwd = None
+    module, reason = _worker_daemon(master, cwd, pythonpath,
+                                    site.getsitepackages())
+    if module is None:
+        warn_once(
+            "worker_daemon",
+            f"get_spark keeps PySpark's own Python-worker daemon: {reason}. "
+            "Every Python task then re-reads pyspark.zip and the "
+            "spark-core jar before it starts (~0.2 s each).", stacklevel=3)
+    return module
+
+
 def get_spark(app_name: str = "dask-relabeling-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -74,6 +137,15 @@ def get_spark(app_name: str = "dask-relabeling-spark",
     Local runs default to ``local[$SPARK_GRAFT_CPUS or *]``; on a real
     cluster pass ``master=None`` with a pre-configured environment and these
     settings still apply (they are safe cluster-side defaults).
+
+    On a local master whose Python workers can import this package (it
+    sits in the working directory, on ``PYTHONPATH`` or in site-packages)
+    the session runs its workers under ``worker_daemon``
+    (``spark.python.daemon.module``), which spares every Python task a
+    re-read of ``pyspark.zip`` and the spark-core jar (~0.2 s).  Otherwise
+    PySpark's own daemon stays and a warning, once per process, names
+    the reason.  The setting applies when this call creates the
+    SparkContext; an already running context keeps its daemon.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -103,10 +175,13 @@ def get_spark(app_name: str = "dask-relabeling-spark",
         .config("spark.driver.extraJavaOptions",
                 "-Duser.language= -Duser.country=")
     )
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+    daemon = _daemon_module(master or os.environ["SPARK_MASTER"])
+    if daemon is not None:
+        builder = builder.config("spark.python.daemon.module", daemon)
     spark = builder.getOrCreate()
     # Pin the JVM default locale to ROOT: operators.text.fold_lower's
     # cross-engine lowercase contract assumes locale-root case mapping,

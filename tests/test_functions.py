@@ -1,4 +1,5 @@
 """dense_ids (scale path) must agree with dense_rank (window path)."""
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -299,3 +300,18 @@ def test_hll_sketch_rollup_mergeable(spark):
                       .alias("n")).first()["n"])
     assert whole == rolled, "partial-sketch rollup must merge losslessly"
     assert abs(whole - exact) <= max(3, exact * 0.05)
+
+
+@pytest.mark.parametrize("num_partitions", [None, 3])
+def test_dense_ids_duplicates_and_null_match_dense_rank(spark,
+                                                        num_partitions):
+    """Duplicates share one id and NULL ranks first, exactly as
+    ``dense_rank() - 1 + start`` over the ascending values."""
+    df = spark.createDataFrame(
+        [(v,) for v in (7, None, 3, 7, 11, 3, None, -2, 40, 11)], "v long")
+    got = {r.v: r.id for r in dense_ids(df, "v", num_partitions=num_partitions,
+                                        start=5).collect()}
+    exp = {r.v: r.id for r in df.distinct().select(
+        "v", (F.dense_rank().over(Window.orderBy("v")) - 1 + 5).alias("id"))
+        .collect()}
+    assert got == exp and got[None] == 5

@@ -4,6 +4,7 @@ write byte-identical index content to the old two-pass
 ``ivf_cells(df).join(pq_codes(df), "id")`` formulation it replaced."""
 import math
 import tempfile
+import warnings
 
 from pyspark.sql import functions as F
 
@@ -200,3 +201,24 @@ def test_fused_probe_adc_large_quantizer(spark):
                                   n_sub, sub_dim, cb=cbf,
                                   engine_topk=flag)
         assert (p2, t2) == (want_probe, want_tab)
+
+
+def test_stored_metadata_lookup_failure_warns_once(monkeypatch):
+    """A failed quantizer-size lookup (no JVM handle, as on Spark
+    Connect) still answers False, the engine-side path, but says so:
+    one warning however many queries hit it."""
+    from dask_relabeling_spark import session
+
+    class NoContext:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no JVM handle")
+
+    monkeypatch.setattr(session, "_WARNED", set())
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        answers = [S._stored_metadata_is_small(NoContext(), "/x")
+                   for _ in range(2)]
+    assert answers == [False, False]
+    assert len(caught) == 1
+    assert "RuntimeError: no JVM handle" in str(caught[0].message)
